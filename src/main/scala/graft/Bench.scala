@@ -69,6 +69,12 @@ object Bench {
     * ≈ 1.0 quiet, > 1 when the cores are oversubscribed or memory
     * bandwidth is shared with other tenants. */
   private val McReps = 2
+
+  /** Worker count of [[calibProbeMc]]: the configured core count,
+    * at most 32 and at most the cores the JVM can run on. More workers
+    * than cores would read as contention on a quiet host. */
+  private[graft] def mcThreadCount(cpus: String, available: Int): Int =
+    math.max(1, Seq(cpus.toIntOption.getOrElse(32), 32, available).min)
   private def calibProbeMc(threads: Int): Double = {
     val sinks = new java.util.concurrent.atomic.AtomicLong
     val t0 = System.nanoTime()
@@ -99,8 +105,7 @@ object Bench {
     val calibBefore = calibProbe()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val mcThreads =
-      math.max(2, math.min(scala.util.Try(cpus.toInt).getOrElse(32), 32))
+    val mcThreads = mcThreadCount(cpus, Runtime.getRuntime.availableProcessors)
     val calibMcBefore = calibProbeMc(mcThreads)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -118,7 +123,8 @@ object Bench {
       // suite; same benefit for any production session that repeats
       // its query shapes. First-pass times are unaffected (cold cache
       // either way).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen paths once so the first measured query does

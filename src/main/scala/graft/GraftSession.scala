@@ -16,9 +16,20 @@ import graft.plans.{GraftExtensions, GraftFunctions}
   *  - AQE on: runtime partition coalescing and skew-join splitting;
   *  - parquet nanos-as-long: NanoAOD-era files carry TIMESTAMP(NANOS);
   *  - nested schema pruning: jagged event tables must prune struct
-  *    fields into the scan, not read whole collections.
+  *    fields into the scan, not read whole collections;
+  *  - a codegen cache of [[CodegenCacheEntries]] compiled classes:
+  *    Spark's default holds 100, just under the working set of one
+  *    `RunPipeline.run` iteration, so a repeated pipeline or query mix
+  *    recompiles its classes on every pass. With the larger cache the
+  *    benchmark's timed pipeline iterations recompile nothing and its
+  *    `hmm_pipeline` `op_p50_s` falls (CHANGES.md has the paired runs).
+  *    It is a static conf: it takes effect only when the builder
+  *    creates the session.
   */
 object GraftSession {
+
+  /** Compiled-class cache size (`spark.sql.codegen.cache.maxEntries`). */
+  val CodegenCacheEntries = 8192
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()
@@ -36,6 +47,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .withExtensions(new GraftExtensions)
 
   /** Register graft's native functions on an existing session (the

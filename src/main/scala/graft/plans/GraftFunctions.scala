@@ -133,7 +133,10 @@ object GraftFunctions {
       case other => throw new IllegalArgumentException(
         s"sorted_lower_count: second arg must be an array, got $other")
     }
-    val lows = children(1).eval()
+    val lowsData = children(1).eval()
+    if (lowsData == null) throw new IllegalArgumentException(
+      "sorted_lower_count: lows must be a non-null literal array")
+    val lows = lowsData
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toObjectArray(et)
       .map {

@@ -199,11 +199,16 @@ object StageQueries extends QueryFamily {
   // shape-only renormalized variant, nominal/variant ratio — the
   // datacard's numeric core. All small-data aggregation over s03's
   // output shape.
-  private def s04(s: SparkSession, dir: String): DataFrame = {
+  private def s04(s: SparkSession, dir: String): DataFrame =
     // materialize the (tiny) stage-2 histogram once: without this the
     // template stage's window+pivot would re-derive the whole lineitem
     // subtree — a harmless re-plan here, a double 100 TB scan in prod
-    val hist = s03(s, dir).localCheckpoint()
+    templates(s03(s, dir).localCheckpoint())
+
+  /** Stage-3 template yields from a stage-2 histogram table (s03's
+    * shape). The caller hands in a materialized histogram, so the
+    * lineitem subtree behind it is not planned or run again. */
+  def templates(hist: DataFrame): DataFrame = {
     val pivoted = hist.groupBy(col("region"), col("channel"), col("bin"))
       .agg(
         sum(when(col("variation") === "nominal", col("value"))).as("nom"),
@@ -333,12 +338,15 @@ object StageQueries extends QueryFamily {
   // ---- s05: unbinned column save (S7) ------------------------------------
   // reference: stage2/postprocessor.py:235-253 — per-channel filtered
   // projection of fit inputs.
-  private def s05(s: SparkSession, dir: String): DataFrame = {
-    val base = s01(s, dir)
-    base.filter(col("region") === "h-peak")
+  private def s05(s: SparkSession, dir: String): DataFrame = unbinned(s01(s, dir))
+
+  /** The unbinned fit inputs of a stage-1 table (s01's shape): either
+    * s01 itself or its written, region-partitioned copy, where the
+    * h-peak filter prunes the read to that one partition. */
+  def unbinned(stage1: DataFrame): DataFrame =
+    stage1.filter(col("region") === "h-peak")
       .select(col("event"), col("dimuon_mass"), col("mu1_pt"))
       .orderBy(col("event"))
-  }
   private val s05Sql =
     s"""SELECT event, dimuon_mass, mu1_pt FROM (${s01Sql.replace("ORDER BY event", "")})
        |WHERE region = 'h-peak' ORDER BY event""".stripMargin

@@ -51,3 +51,91 @@ class RunPipelineSpec extends SparkSpec {
     assert(nVar == 35, s"expected 35 variants (nominal + 22 JES + 12 JER), got $nVar")
   }
 }
+
+/** `RunPipeline.run` itself: every table it writes holds the rows of the
+  * StageQueries query it stands for, the stage-3 files are those the
+  * report writers make from those queries, and each result is computed
+  * once — lineitem is scanned once each for s01, s03 and s06. */
+class RunPipelineRunSpec extends SparkSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.classic.GraftBridge
+  import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  import org.apache.spark.sql.util.QueryExecutionListener
+  import queries.StageQueries
+
+  private val dir = sf("sf0.001")
+
+  /** The file scans of every SQL execution `body` runs on `s`. */
+  private def scansOf(s: org.apache.spark.sql.SparkSession)(body: => Unit)
+      : Seq[FileSourceScanExec] = {
+    val scans = scala.collection.mutable.ArrayBuffer.empty[FileSourceScanExec]
+    val walk = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans.synchronized {
+          scans ++= walk.collect(qe.executedPlan) { case f: FileSourceScanExec => f }
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftBridge.drainListenerBus(s.sparkContext, 10000L)
+    s.listenerManager.register(listener)
+    try { body; GraftBridge.drainListenerBus(s.sparkContext, 10000L) }
+    finally s.listenerManager.unregister(listener)
+    scans.toSeq
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.mkString("|")).sorted
+
+  private def table(path: String, like: DataFrame): Seq[String] =
+    rows(spark.read.parquet(path).select(like.columns.map(col): _*))
+
+  test("RunPipeline.run writes each stage's result, computing each once") {
+    val out = Files.createTempDirectory("graft_run").toString
+    // a session of its own, so its listener sees this run's executions only
+    val session = spark.newSession()
+    val scans = scansOf(session)(RunPipeline.run(session, dir, out))
+
+    def q(name: String) = StageQueries.queries(name)(spark, dir)
+    Seq("stage1" -> "s01_stage1_pipeline",
+      "stage2_histograms" -> "s03_stage2_histograms",
+      "stage2_unbinned" -> "s05_unbinned_save",
+      "stage2_variations" -> "s06_variation_fanout").foreach { case (t, name) =>
+      val direct = q(name)
+      assert(table(s"$out/$t", direct) == rows(direct), s"$t differs from $name")
+    }
+
+    val cards = report.Datacards.renderAll(q("s04_stage3_templates"))
+    assert(cards.nonEmpty)
+    cards.foreach { case (region, text) =>
+      assert(Files.readString(Paths.get(s"$out/stage3_datacards/$region.txt")) == text,
+        s"datacard $region differs")
+    }
+    val root = Files.createTempDirectory("graft_run_root").toString + "/t.root"
+    report.TemplateExport.writeTemplates(q("s03_stage2_histograms"), root)
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(root)),
+      Files.readAllBytes(Paths.get(s"$out/stage3_templates.root"))),
+      "ROOT templates differ")
+
+    def over(name: String) =
+      scans.filter(_.relation.location.rootPaths.exists(_.toString.endsWith(name)))
+    assert(over("lineitem.parquet").size == 3,
+      s"lineitem scanned ${over("lineitem.parquet").size} times, not once each for s01, s03, s06")
+    // the unbinned inputs come from the written stage 1, h-peak only
+    val stage1Reads = over("stage1")
+    assert(stage1Reads.size == 1 && stage1Reads.forall(_.partitionFilters.nonEmpty),
+      s"stage-1 reads: ${stage1Reads.map(_.partitionFilters)}")
+  }
+
+  test("RunPipeline names the first missing input table") {
+    val empty = Files.createTempDirectory("graft_run_empty").toString
+    assert(RunPipeline.missingInput(empty).contains(s"$empty/lineitem.parquet"))
+    assert(RunPipeline.missingInput(dir).isEmpty)
+    val onlyLineitem = Files.createTempDirectory("graft_run_li").toString
+    Files.createSymbolicLink(Paths.get(s"$onlyLineitem/lineitem.parquet"),
+      Paths.get(s"$dir/lineitem.parquet"))
+    assert(RunPipeline.missingInput(onlyLineitem).contains(s"$onlyLineitem/orders.parquet"))
+  }
+}

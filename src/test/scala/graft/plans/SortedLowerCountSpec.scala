@@ -70,4 +70,17 @@ class SortedLowerCountSpec extends SparkSpec {
     assert(r.getInt(1) == 0)
     assert(r.getInt(2) == lows.length)
   }
+
+  test("a NULL lows array is rejected with a clear error, not an NPE") {
+    graft.plans.GraftFunctions.register(spark)
+    val e = intercept[Exception] {
+      spark.range(1).selectExpr(
+        "sorted_lower_count(0.5D, CAST(NULL AS ARRAY<DOUBLE>)) AS a").collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage == "sorted_lower_count: lows must be a non-null literal array"),
+      s"unexpected failure: $e")
+    assert(!causes.exists(_.isInstanceOf[NullPointerException]), s"NPE: $e")
+  }
 }

@@ -12,7 +12,9 @@ set -uo pipefail
 cd "$(dirname "$0")/.."
 sbt "runMain graft.Bench"
 rc=$?
-if [ -f BENCH_MARKER.txt ]; then
+# BENCH_MARKER.txt holds the last successful run's marker: echo it only
+# when this run succeeded, so a failed run never ends on stale numbers
+if [ "$rc" -eq 0 ] && [ -f BENCH_MARKER.txt ]; then
   grep '^BENCH_JSON ' BENCH_MARKER.txt | tail -1
 fi
 exit $rc
