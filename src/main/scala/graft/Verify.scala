@@ -13,6 +13,14 @@ object Verify {
     // optional dev-only filter; the driver always calls with 2 args
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
+    // oracles derived from reference fixtures are built here, before any
+    // query runs or any output is written: a missing fixture stops the
+    // run with refData's message naming the file
+    val oracles = try SparkEntry.oracleSql catch {
+      case e: IllegalStateException =>
+        System.err.println(s"graft.Verify: ${e.getMessage}")
+        sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -81,7 +89,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -737,7 +737,7 @@ object CorrectionQueries extends QueryFamily {
     "l23_jec_data_residual" -> (l23 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  lazy val oracle: Map[String, String] = Map(
     "l20_btag_csv_real" -> l20Sql,
     "l28_pu_file_reweight" -> l28Sql,
     "l21_jec_levels_real" -> l21Sql,

@@ -2728,7 +2728,7 @@ object MLQueries extends QueryFamily {
     "m13_multiclass_bdt" -> (m13 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  lazy val oracle: Map[String, String] = Map(
     "m33_ablation_importance" -> m33Sql,
     "m34_fold_scalers" -> m34Sql,
     "m35_vbf_dnn_real" -> m35Sql,

@@ -521,7 +521,7 @@ object StreamQueries extends QueryFamily {
     "n08_stream_left_outer" -> (n08 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  lazy val oracle: Map[String, String] = Map(
     "n13_watermark_audit" -> n13Sql,
     "n14_stream_dnn_scoring" -> n14Sql,
     "n12_stream_root_sf" -> n12Sql,

@@ -59,6 +59,12 @@ package object queries {
   /** A query family contributes driver-checkable queries + DuckDB oracles. */
   trait QueryFamily {
     def queries: Map[String, (SparkSession, String) => DataFrame]
+
+    /** DuckDB oracle SQL per query key. Creating a family reads no
+      * file: an oracle derived from a reference fixture (via
+      * [[refData]]) is built on first access (`lazy val`), so a missing
+      * fixture fails only the query or oracle that needs it, with
+      * `refData`'s message naming the file. */
     def oracle: Map[String, String]
     protected def t(dir: String, name: String): String = s"$dir/$name.parquet"
 

@@ -52,6 +52,7 @@ class Round8EvalSpec extends SparkSpec {
   }
 
   test("m35 native forward == naive driver-side Scala forward, real weights, exact floats") {
+    SparkSpec.assumeQueryFixtures("m35_vbf_dnn_real")
     // fully independent re-computation: weights via TorchPt, scalers via
     // NumpyFile, the chunk-16 fold and clamped tanh re-spelled in plain
     // Scala — if the native mlp_dense codegen, the typedLit weight path,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec.assumeAllQueryFixtures
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -30,6 +31,7 @@ class CodegenHealthSpec extends SparkSpec {
   private val benign = Set.empty[String]
 
   test("no query falls out of codegen") {
+    assumeAllQueryFixtures()
     val errors = mutable.Map.empty[String, Int]
     var current = "(none)"
     val appender = new AbstractAppender(

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.SparkSpec.assumeQueryFixtures
 
 /** The repo's central determinism claim, tested structurally: every
   * cross-row float fold is either exact integer arithmetic or a
@@ -62,6 +63,7 @@ class PartitionInvarianceSpec extends SparkSpec {
 
   targets.foreach { name =>
     test(s"$name is invariant to the shuffle partition count") {
+      assumeQueryFixtures(name)
       val at2 = runAt(name, "2")
       val at64 = runAt(name, "64")
       assert(at2.nonEmpty, s"$name returned no rows at sf0.001")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.SparkSpec.{assumeAllQueryFixtures, assumeQueryFixtures}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -58,6 +59,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("l21 real JEC level chain is two hash joins, zero nested-loop probes") {
+    assumeQueryFixtures("l21_jec_levels_real")
     // the bin-index equi-key design: a range-only spelling would plan
     // BroadcastNestedLoopJoin over 82/1972-row tables (~2k predicate
     // evals per jet); the count-of-lows index keeps it a hash probe
@@ -70,6 +72,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("l10 real-source JES fan-out adds NO joins over the chain (pure projection)") {
+    assumeQueryFixtures("l10_jec_variant_columns")
     // 22 real-source variant columns come from literal-array element_at
     // lookups; only the chain's 3 tiny range joins + the 1-row JER map
     // broadcast may appear
@@ -83,6 +86,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("m36 fold ensemble plans one scan and no join") {
+    assumeQueryFixtures("m36_vbf_fold_ensemble")
     val plan = planOf(MLQueries.queries("m36_vbf_fold_ensemble")(spark, dir))
     assert(!plan.contains("Join"), s"join in m36:\n$plan")
     val nScan = "Scan parquet".r.findAllIn(plan).length
@@ -124,6 +128,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("no query plan degenerates to a cartesian product (whitelist: tiny config fan-outs)") {
+    assumeAllQueryFixtures()
     // CartesianProduct is O(n·m) with no key — at 100 TB it is always a
     // bug unless one side is a literal config list. Streaming queries are
     // excluded because constructing them executes the stream.
@@ -143,6 +148,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ROOT-fed lookups broadcast the tiny calibration side and prune the scan") {
+    assumeQueryFixtures("l14_root_sf_join", "l15_nnlops_interp", "s10_root_scan")
     // l14 (24-cell TH2D SF map) and l15 (18-segment TGraph interp) must
     // join as BROADCASTS of the calibration table — the corpus side
     // never shuffles for a lookup — and the V2 scan must show only the
@@ -327,6 +333,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("every SinglePartition exchange funnels only bounded (aggregated/limited) data") {
+    assumeAllQueryFixtures()
     // An unpartitioned Window/Sort plans `Exchange SinglePartition`:
     // every row through ONE task — fine on a distribution table or a
     // top-k survivor set, a scale-killer on a corpus-sized input. The
@@ -490,6 +497,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("l16 zpt JSON lookup broadcasts the 12-bin table") {
+    assumeQueryFixtures("l16_zpt_json_lookup")
     val plan = planOf(LookupQueries.queries("l16_zpt_json_lookup")(spark, dir))
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
       s"zpt lookup not broadcast:\n$plan")
@@ -497,12 +505,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("m34 scaler standardization broadcasts the 12-row scaler table") {
+    assumeQueryFixtures("m34_fold_scalers")
     val plan = planOf(MLQueries.queries("m34_fold_scalers")(spark, dir))
     assert(plan.contains("BroadcastHashJoin"),
       s"scaler join not broadcast:\n$plan")
   }
 
   test("m35 real-DNN forward is one scan with no join or extra exchange") {
+    assumeQueryFixtures("m35_vbf_dnn_real")
     val plan = planOf(MLQueries.queries("m35_vbf_dnn_real")(spark, dir))
     assert(!plan.contains("Join"), s"unexpected join:\n$plan")
     // one repartition (documented) + the orderBy range exchange only
@@ -546,6 +556,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("s14 ROOT flagship prunes the tree scan to the two needed branches") {
+    assumeQueryFixtures("s14_root_stage1")
     val df = StageQueries.queries("s14_root_stage1")(spark, dir)
     val plan = planOf(df)
     // column pruning pushed into the connector: the scan must not carry

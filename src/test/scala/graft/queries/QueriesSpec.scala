@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec.{assumeAllQueryFixtures, assumeQueryFixtures}
 
 /** One spec per registered operator: each query must run on sf0.001,
   * return a stable schema, and have a DuckDB oracle. The exact-value
@@ -11,6 +12,7 @@ class QueriesSpec extends SparkSpec {
   private val dir = sf("sf0.001")
 
   test("every query has an oracle") {
+    assumeAllQueryFixtures()
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries missing oracle: ${q -- o}")
@@ -42,6 +44,7 @@ class QueriesSpec extends SparkSpec {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query $name runs on sf0.001 with stable schema") {
+      assumeQueryFixtures(name)
       val df = fn(spark, dir)
       val schema = df.schema
       val n = df.count()

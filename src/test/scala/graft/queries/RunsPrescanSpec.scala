@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.SparkSpec.assumeQueryFixtures
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
@@ -42,6 +43,7 @@ class RunsPrescanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("the weight table reaches the event chain via broadcast") {
+    assumeQueryFixtures("s16_runs_prescan")
     val df = StageQueries.queries("s16_runs_prescan")(spark, sf("sf0.001"))
     df.collect() // finalize AQE
     val plan = df.queryExecution.executedPlan

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.SparkSpec.assumeRefData
 import graft.functions.TFormula
 import graft.lookup.JecTextTables
 
@@ -50,6 +51,7 @@ class TFormulaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("every distinct formula in the real btag CSV parses") {
+    assumeRefData("btag/DeepCSV_102XSF_V1.csv")
     val src = scala.io.Source.fromFile(
       graft.queries.refData("btag/DeepCSV_102XSF_V1.csv"))
     val forms = try src.getLines().drop(1)
@@ -61,6 +63,7 @@ class TFormulaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("reshape-central Horner recognition covers all rows with literal coeffs") {
+    assumeRefData("btag/DeepCSV_102XSF_V1.csv")
     val src = scala.io.Source.fromFile(
       graft.queries.refData("btag/DeepCSV_102XSF_V1.csv"))
     val rows = try src.getLines().drop(1).map(_.split(",", 11).map(_.trim))
@@ -85,6 +88,8 @@ class TFormulaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the DATA-era residual formula (TMath:: namespace) parses and evaluates") {
+    assumeRefData("jec/Autumn18_RunA_V19_DATA_L2L3Residual_AK4PFchs.jec.txt",
+      "jec/Autumn18_RunA_V19_DATA_L1FastJet_AK4PFchs.jec.txt")
     val res = JecTextTables.parseLevel(graft.queries.refData(
       "jec/Autumn18_RunA_V19_DATA_L2L3Residual_AK4PFchs.jec.txt"))
     assert(res.rows.size == 36)
@@ -101,6 +106,9 @@ class TFormulaSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("level-file headers parse and the L1/L2 grids are contiguous") {
+    assumeRefData("jec/Autumn18_V19_MC_L1FastJet_AK4PFchs.jec.txt",
+      "jec/Autumn18_V19_MC_L2Relative_AK4PFchs.jec.txt",
+      "jec/Autumn18_V19_MC_UncertaintySources_AK4PFchs.junc.txt")
     val l1 = JecTextTables.parseLevel(graft.queries.refData(
       "jec/Autumn18_V19_MC_L1FastJet_AK4PFchs.jec.txt"))
     assert(l1.binVars == Vector("JetEta"))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.SparkSpec.assumeRefData
 import org.apache.spark.sql.functions._
 
 /** Golden checks for the pure-JVM ROOT TH1 reader against the
@@ -11,12 +12,13 @@ import org.apache.spark.sql.functions._
   * three ROOT eras is the correctness evidence a format reader needs. */
 class RootHistSourceSpec extends SparkSpec {
 
-  private val refData = "/root/reference/data"
+  private val refData = graft.queries.referenceDataRoot
   private def rootDf(path: String) =
     spark.read.format("graft.sources.RootHistSource")
       .option("path", path).load()
 
   test("TH1D fixed-bin pileup profile parses with exact shape and unit integral") {
+    assumeRefData("pileup/mcPileup2018.root")
     val df = rootDf(s"$refData/pileup/mcPileup2018.root").cache()
     val hists = df.select("hist", "cls", "nbins", "xmin", "xmax", "entries")
       .distinct().collect()
@@ -42,6 +44,7 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("TH1D data profile with stored sumw2 matches independent-parse goldens") {
+    assumeRefData("pileup/puData2018_withVar.root")
     val df = rootDf(s"$refData/pileup/puData2018_withVar.root").cache()
     val names = df.select("hist").distinct().collect().map(_.getString(0)).sorted
     assert(names.toSeq == Seq("pileup", "pileup_minus", "pileup_plus"))
@@ -56,6 +59,7 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("TH1F variable-bin scale-factor histograms carry their edge arrays") {
+    assumeRefData("muon_sf/year2016/RunBCDEF_SF_Trigger.root")
     val df = rootDf(
       s"$refData/muon_sf/year2016/RunBCDEF_SF_Trigger.root").cache()
     val eta = df.filter(col("hist") === "eta_DATA")
@@ -87,6 +91,7 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("TH2D muon-ID scale-factor map parses with independent-parse goldens") {
+    assumeRefData("muon_sf/year2018/RunABCD_SF_ID.root")
     val df = rootDf(s"$refData/muon_sf/year2018/RunABCD_SF_ID.root").cache()
     val h = df.filter(col("hist") === "NUM_LooseID_DEN_genTracks_pt_abseta")
     // goldens from the independent Python parse: 6x4 (pt, |eta|) map,
@@ -108,6 +113,7 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("TH3D resolution calibration parses with independent-parse goldens") {
+    assumeRefData("res_calib/res_calib_Data_2018.root")
     val df = rootDf(s"$refData/res_calib/res_calib_Data_2018.root").cache()
     // golden: 4x3x3 (pt, |eta1|, |eta2|), 150 cells, entries 36,
     // integral 40.4808673
@@ -126,6 +132,8 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("TGraphErrors and TGraphAsymmErrors parse with point-level goldens") {
+    assumeRefData("NNLOPS_reweight.root",
+      "muon_sf/year2016/RunBCDEF_SF_Trigger.root")
     val g = spark.read.format("graft.sources.RootGraphSource")
       .option("path", s"$refData/NNLOPS_reweight.root").load().cache()
     // the NNLOPS file holds 8 ratio curves
@@ -155,6 +163,7 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("TTree basket decode: re-histogrammed branch equals the file's own TH1F") {
+    assumeRefData("mass_res_pisa/muonresolution.root")
     // The strongest possible in-file golden: muonresolution.root carries
     // BOTH the raw TTree (4 jagged vector<double> branches over 100k
     // events) and the histograms that were filled FROM it. Decoding the
@@ -190,6 +199,7 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("TProfile bin means cross-check against the TH2F they were profiled from") {
+    assumeRefData("mass_res_pisa/muonresolution.root")
     // in-file cross-golden: hPtErrRel_Pt_pfx is ROOT's own profile of
     // the TH2F hPtErrRel_Pt — the profile's per-x-bin mean (content /
     // bin_entries) must equal the TH2's y-center weighted mean in that
@@ -245,6 +255,7 @@ class RootHistSourceSpec extends SparkSpec {
     assert(garbage.fold(_ => true, _.isEmpty), s"got $garbage")
     // truncated real file: cut mid-way through the key chain — the walk
     // must stop at the buffer edge or raise, not spin
+    assumeRefData("pileup/mcPileup2018.root")
     val real = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$refData/pileup/mcPileup2018.root"))
     val cut = tmp(java.util.Arrays.copyOfRange(real, 0, real.length / 2))
@@ -261,6 +272,7 @@ class RootHistSourceSpec extends SparkSpec {
   }
 
   test("directory scan expands recursively, one partition per file, pruning works") {
+    assumeRefData("pileup/mcPileup2018.root")
     val df = rootDf(refData)
     // every TH1 in the reference's data tree parses (TH2/TGraph skipped)
     val nHists = df.filter(col("bin") === 0).count()

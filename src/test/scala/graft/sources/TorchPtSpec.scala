@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.SparkSpec.assumeRefData
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TorchPt against the reference's actual trained model files, pinned
@@ -8,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * — no torch, no shared code with the Scala reader). */
 class TorchPtSpec extends AnyFunSuite {
 
-  private lazy val sd = TorchPt.readStateDict(graft.queries.refData(
-    "trained_models/vbf/models/model_pytorch_test_0.pt")).toMap
+  private val fold0 = "trained_models/vbf/models/model_pytorch_test_0.pt"
+  private lazy val sd = TorchPt.readStateDict(graft.queries.refData(fold0)).toMap
 
   test("fold-0 state dict carries the 24->128->64->32->1 architecture") {
+    assumeRefData(fold0)
     assert(sd.keySet == Set("fc1.weight", "fc1.bias", "fc2.weight",
       "fc2.bias", "fc3.weight", "fc3.bias", "output.weight", "output.bias"))
     assert(sd("fc1.weight").shape == Seq(128, 24))
@@ -22,6 +24,7 @@ class TorchPtSpec extends AnyFunSuite {
   }
 
   test("spot values match the independent Python decode bit-for-bit") {
+    assumeRefData(fold0)
     val w1 = sd("fc1.weight")
     assert(w1.data(0) == 6.598455905914307)
     assert(w1.data(1) == 0.16769953072071075)
@@ -35,6 +38,8 @@ class TorchPtSpec extends AnyFunSuite {
   }
 
   test("all four folds parse with consistent shapes") {
+    assumeRefData((1 until 4).map(f =>
+      s"trained_models/vbf/models/model_pytorch_test_$f.pt"): _*)
     (1 until 4).foreach { fold =>
       val m = TorchPt.readStateDict(graft.queries.refData(
         s"trained_models/vbf/models/model_pytorch_test_$fold.pt")).toMap
