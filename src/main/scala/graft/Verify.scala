@@ -1,8 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails leaves no directory in `outDir` (see [[writeQuery]]); the run
+  * still exits 0 and ends with one stderr line naming the failed
+  * queries. */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
@@ -48,13 +52,13 @@ object Verify {
     val listener = new ExecMetricsListener
     spark.sparkContext.addSparkListener(listener)
     val execMetrics = Seq.newBuilder[(String, (Long, Long, Long, Long))]
-    SparkEntry.queries
+    val failed = Seq.newBuilder[String]
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        writeQuery(spark, sfDir, outDir, name, fn)
         // stderr timing of the FULL write path (driver reads stdout
         // only). Bench measures count(), which prunes unreferenced
         // projections — this is the number that catches a query whose
@@ -64,11 +68,12 @@ object Verify {
           f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       org.apache.spark.sql.classic.GraftBridge
         .drainListenerBus(spark.sparkContext, 2000L)
       execMetrics += (name -> listener.snapshot())
-      }
+    }
     val em = execMetrics.result().collect {
       case (k, (sw, sm, sd, pm)) if sw > 0 || sm > 0 || sd > 0 =>
         s""""$k":{"shuffle_write":$sw,"spill_mem":$sm,"spill_disk":$sd,"peak_exec_mem":$pm}"""
@@ -93,5 +98,29 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // the exit status stays 0: the driver reads each query's output, and
+    // one failed query must not void the others
+    val failures = failed.result()
+    System.err.println(s"[verify] ${failures.size} of ${selected.size} queries failed" +
+      (if (failures.isEmpty) "" else failures.sorted.mkString(": ", ", ", "")))
   }
+
+  /** Writes query `name`'s result to `outDir/name` as one parquet file.
+    * What an earlier run left there is deleted first, and whatever this
+    * write left is deleted when the build or the write throws, so a
+    * failed query leaves no output behind. */
+  def writeQuery(spark: SparkSession, sfDir: String, outDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Unit = {
+    val dest = Paths.get(outDir, name)
+    deleteTree(dest)
+    try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dest.toString)
+    catch { case e: Throwable => deleteTree(dest); throw e }
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val paths = Files.walk(p)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally paths.close()
+    }
 }

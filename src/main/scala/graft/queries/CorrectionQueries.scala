@@ -37,10 +37,6 @@ import graft.lookup.JecTextTables
   */
 object CorrectionQueries extends QueryFamily {
 
-  private def fixturesDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURES_DIR",
-      "/root/repo/src/main/resources/fixtures")
-
   /** Bin index by count-of-lows <= x over a literal sorted bounds
     * array: equivalent to a [lo, hi) range match when the bins are a
     * contiguous partition (JecTextTables checks that), but joinable as
@@ -141,7 +137,7 @@ object CorrectionQueries extends QueryFamily {
       .orderBy(col("event"))
   }
   private val l20Sql = {
-    val csv = s"$fixturesDir/btag_reshape_central.csv"
+    val csv = s"$fixturesRoot/btag_reshape_central.csv"
     val horner = "(c0 + x * (c1 + x * (c2 + x * (c3 + x * (c4 + x * (c5 + x * c6))))))"
     s"""WITH tbl AS (SELECT * FROM read_csv('$csv', header=true, columns={
        |  'flavor':'INT','eta_lo':'DOUBLE','eta_hi':'DOUBLE',
@@ -268,8 +264,8 @@ object CorrectionQueries extends QueryFamily {
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
   }
   private lazy val l21Sql = {
-    val l1csv = s"$fixturesDir/jec_l1_mc.csv"
-    val l2csv = s"$fixturesDir/jec_l2_mc.csv"
+    val l1csv = s"$fixturesRoot/jec_l1_mc.csv"
+    val l2csv = s"$fixturesRoot/jec_l2_mc.csv"
     def cl(x: String, lo: String, hi: String) = s"LEAST(GREATEST($x, $lo), $hi)"
     val f1 = TFormula.toSql(jecL1.formula,
       Vector(cl("j.rho", "l1.rho_lo", "l1.rho_hi"),
@@ -415,9 +411,9 @@ object CorrectionQueries extends QueryFamily {
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
   }
   private lazy val l23Sql = {
-    val l1csv = s"$fixturesDir/jec_l1_data.csv"
-    val l2csv = s"$fixturesDir/jec_l2_data.csv"
-    val rescsv = s"$fixturesDir/jec_res_data.csv"
+    val l1csv = s"$fixturesRoot/jec_l1_data.csv"
+    val l2csv = s"$fixturesRoot/jec_l2_data.csv"
+    val rescsv = s"$fixturesRoot/jec_res_data.csv"
     def cl(x: String, lo: String, hi: String) = s"LEAST(GREATEST($x, $lo), $hi)"
     val f1 = TFormula.toSql(jecL1D.formula,
       Vector(cl("j.rho", "l1.rho_lo", "l1.rho_hi"),

@@ -25,7 +25,7 @@ object CsFrameQueries extends QueryFamily {
   private val beamE = 6500.0
 
   // ---- layered computation, Spark side -----------------------------------
-  private def sparkLayers(df: DataFrame): DataFrame = {
+  private[queries] def sparkLayers(df: DataFrame): DataFrame = {
     val c = (n: String) => col(n)
     df
       // layer 1: four-vector components
@@ -68,7 +68,12 @@ object CsFrameQueries extends QueryFamily {
       .withColumn("pw_mag0", sqrt(c("pwx") * c("pwx") + c("pwy") * c("pwy") + c("pwz") * c("pwz")))
       .withColumn("dot_pf", (c("px") * c("pfx") + c("py") * c("pfy") + c("pz") * c("pfz")) / c("pf_mag0"))
       .withColumn("dot_pw", (c("px") * c("pwx") + c("py") * c("pwy") + c("pz") * c("pwz")) / c("pw_mag0"))
-      .withColumn("ffilter", c("dot_pf") > c("dot_pw"))
+      // dots equal to within 1e-9 (relative) are a tie: the dimuon's pz
+      // is analytically 0 and its sign is FP noise that differs between
+      // engines (±5e-15 for eta ±0.2) — a tie takes the `otherwise`
+      // branch, as an exact 0 does
+      .withColumn("ffilter", c("dot_pf") > c("dot_pw") &&
+        abs(c("dot_pf") - c("dot_pw")) > lit(1e-9) * (abs(c("dot_pf")) + abs(c("dot_pw"))))
       // layer 4: charge-dependent sign flips, then unit vectors
       .withColumn("sf", when(c("ffilter"), c("q2")).otherwise(negate(c("q2"))))
       .withColumn("sw", when(c("ffilter"), negate(c("q2"))).otherwise(c("q2")))
@@ -207,11 +212,15 @@ object CsFrameQueries extends QueryFamily {
        |  (px * pfx + py * pfy + pz * pfz) / pf_mag0 AS dot_pf,
        |  (px * pwx + py * pwy + pz * pwz) / pw_mag0 AS dot_pw
        | FROM l3),
+       |l3c AS (
+       | SELECT *, dot_pf > dot_pw
+       |  AND ABS(dot_pf - dot_pw) > 1e-9 * (ABS(dot_pf) + ABS(dot_pw)) AS ffilter
+       | FROM l3b),
        |l4 AS (
        | SELECT *,
-       |  CASE WHEN dot_pf > dot_pw THEN q2 ELSE -(q2) END AS sf,
-       |  CASE WHEN dot_pf > dot_pw THEN -(q2) ELSE q2 END AS sw
-       | FROM l3b),
+       |  CASE WHEN ffilter THEN q2 ELSE -(q2) END AS sf,
+       |  CASE WHEN ffilter THEN -(q2) ELSE q2 END AS sw
+       | FROM l3c),
        |l4b AS (
        | SELECT *,
        |  sf * pfx / pf_mag0 AS ufx, sf * pfy / pf_mag0 AS ufy, sf * pfz / pf_mag0 AS ufz,

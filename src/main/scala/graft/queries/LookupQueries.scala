@@ -162,13 +162,11 @@ object LookupQueries extends QueryFamily {
   // CSV fixture (kind, source, lo, hi, val) scanned once per query and
   // broadcast; the DuckDB oracle reads the SAME file, so the magnitudes
   // cross the engine boundary as data, not as duplicated literals.
-  private[queries] val jecCsvPath: String =
-    sys.env.getOrElse("GRAFT_FIXTURES_DIR",
-      "/root/repo/src/main/resources/fixtures") + "/jec_tables.csv"
+  private[queries] lazy val jecCsvPath: String = s"$fixturesRoot/jec_tables.csv"
   private def jecTables(s: SparkSession): DataFrame =
     s.read.schema("kind STRING, source STRING, lo DOUBLE, hi DOUBLE, val DOUBLE")
       .option("header", "true").csv(jecCsvPath)
-  private val jecCsvSql =
+  private lazy val jecCsvSql =
     s"""(SELECT * FROM read_csv('$jecCsvPath', header=true,
        |  columns={'kind':'VARCHAR','source':'VARCHAR','lo':'DOUBLE','hi':'DOUBLE','val':'DOUBLE'}))""".stripMargin
   private val jerNames: Seq[String] = (1 to 6).map(i => s"jer$i")
@@ -265,8 +263,7 @@ object LookupQueries extends QueryFamily {
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
   }
   private lazy val l10Sql = {
-    val segsCsv = sys.env.getOrElse("GRAFT_FIXTURES_DIR",
-      "/root/repo/src/main/resources/fixtures") + "/jes_sources_2018.csv"
+    val segsCsv = s"$fixturesRoot/jes_sources_2018.csv"
     val jesCols = jesSourceNames.flatMap { n =>
       val d = s"""(s_$n.u0 + (s_$n.u1 - s_$n.u0) *
          | LEAST(GREATEST((pt_jec - s_$n.x0) / (s_$n.x1 - s_$n.x0), 0.0), 1.0))""".stripMargin
@@ -357,7 +354,7 @@ object LookupQueries extends QueryFamily {
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
         col("source"))
   }
-  private val l12Sql =
+  private lazy val l12Sql =
     s"""WITH jec AS (SELECT * FROM $jecCsvSql),
        |base AS (
        | SELECT l_orderkey, l_linenumber, l_extendedprice,
@@ -4322,7 +4319,7 @@ object LookupQueries extends QueryFamily {
     "l12_jec_table_driven" -> (l12 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  lazy val oracle: Map[String, String] = Map(
     "l15_nnlops_interp" -> l15Sql,
     "l16_zpt_json_lookup" -> l16Sql,
     "l17_jec_unc_real" -> l17Sql,

@@ -576,9 +576,7 @@ object StageQueries extends QueryFamily {
   // contains multi-entry files so the oracle (gen_runs_fixture.py, same
   // sum-all semantics) pins that contract. On single-entry production
   // files the two computations are identical.
-  private lazy val runsFixtureDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURES_DIR",
-      "/root/repo/src/main/resources/fixtures") + "/runs"
+  private lazy val runsFixtureDir: String = s"$fixturesRoot/runs"
   private def s16(s: SparkSession, dir: String): DataFrame = {
     val runs = s.read.format("root-tree").option("path", runsFixtureDir).load()
       .filter(col("tree") === "Runs" &&

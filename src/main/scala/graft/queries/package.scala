@@ -44,6 +44,24 @@ package object queries {
     sys.env.getOrElse("GRAFT_REFERENCE_DATA",
       sys.props.getOrElse("graft.reference.data", "/root/reference/data"))
 
+  /** Root of the program's own fixture tree (the checkout's
+    * `src/main/resources/fixtures`: JEC/b-tag CSV tables, the Runs-tree
+    * ROOT files), read by l10, l12, l20, l21, l23 and s16 and by their
+    * oracles. Resolved from `GRAFT_FIXTURES_DIR`, then the
+    * `graft.fixtures.dir` system property, then the classpath's
+    * `fixtures` resource directory when it is a plain directory (the
+    * build's class directory; inside a jar DuckDB could not read it). */
+  def fixturesRoot: String =
+    sys.env.get("GRAFT_FIXTURES_DIR")
+      .orElse(sys.props.get("graft.fixtures.dir"))
+      .orElse(Option(getClass.getResource("/fixtures"))
+        .filter(_.getProtocol == "file")
+        .map(u => new java.io.File(u.toURI))
+        .filter(_.isDirectory).map(_.getPath))
+      .getOrElse(throw new IllegalStateException(
+        "fixtures directory not found: set GRAFT_FIXTURES_DIR to the " +
+          "program's fixture tree (src/main/resources/fixtures in the checkout)"))
+
   /** Resolve a fixture path under [[referenceDataRoot]], failing with a
     * clear message (instead of a deep-in-the-plan FileNotFound) when
     * the fixture tree is absent. */

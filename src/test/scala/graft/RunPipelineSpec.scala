@@ -55,7 +55,10 @@ class RunPipelineSpec extends SparkSpec {
 /** `RunPipeline.run` itself: every table it writes holds the rows of the
   * StageQueries query it stands for, the stage-3 files are those the
   * report writers make from those queries, and each result is computed
-  * once — lineitem is scanned once each for s01, s03 and s06. */
+  * once — lineitem is scanned once each for s01, s03 and s06. Its four
+  * chains run on threads of their own: the jobs carry the caller's
+  * local properties, a failure is thrown only once every chain has
+  * ended, and the CLI exits 1 on it. */
 class RunPipelineRunSpec extends SparkSpec {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions.col
@@ -127,6 +130,89 @@ class RunPipelineRunSpec extends SparkSpec {
     val stage1Reads = over("stage1")
     assert(stage1Reads.size == 1 && stage1Reads.forall(_.partitionFilters.nonEmpty),
       s"stage-1 reads: ${stage1Reads.map(_.partitionFilters)}")
+  }
+
+  test("RunPipeline.run's jobs carry the caller's local properties and output stream") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val out = Files.createTempDirectory("graft_run_tags").toString
+    val sc = spark.sparkContext
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(String.valueOf(e.properties.getProperty("graft.test.caller")))
+    }
+    val printed = new java.io.ByteArrayOutputStream
+    GraftBridge.drainListenerBus(sc, 10000L)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.caller", "run-caller")
+    try {
+      Console.withOut(printed)(RunPipeline.run(spark, dir, out))
+      GraftBridge.drainListenerBus(sc, 10000L)
+    } finally {
+      sc.setLocalProperty("graft.test.caller", null)
+      sc.removeSparkListener(listener)
+    }
+    val seen = tags.toArray.toSeq
+    assert(seen.nonEmpty && seen.forall(_ == "run-caller"),
+      s"job tags: ${seen.groupBy(identity).view.mapValues(_.size).toMap}")
+    val lines = printed.toString("UTF-8").linesIterator.toSeq
+    assert(lines.count(_.startsWith("[pipeline] ")) == 7, lines.mkString("\n"))
+  }
+
+  private def pipelineThreads: Seq[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.getName.startsWith("graft-pipeline-") && t.isAlive)
+  }
+
+  test("RunPipeline.run throws the failed chain's error once every chain has ended") {
+    val noOrders = Files.createTempDirectory("graft_run_no_orders").toString
+    Files.createSymbolicLink(Paths.get(s"$noOrders/lineitem.parquet"),
+      Paths.get(s"$dir/lineitem.parquet"))
+    val out = Files.createTempDirectory("graft_run_fail").toString
+    // Spark attaches a caller stack trace as suppressed: count only the
+    // failures of other chains
+    def chainFailures(e: Throwable) =
+      e.getSuppressed.toSeq.filter(_.isInstanceOf[org.apache.spark.sql.AnalysisException])
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      RunPipeline.run(spark, noOrders, out))
+    assert(e.getMessage.contains(s"$noOrders/orders.parquet"), e.getMessage)
+    assert(chainFailures(e).isEmpty, chainFailures(e))
+    assert(pipelineThreads.isEmpty, s"still running: ${pipelineThreads.map(_.getName)}")
+    // the chains that do not read orders ran to the end
+    Seq("stage1", "stage2_unbinned", "stage2_histograms", "stage2_variations")
+      .foreach(t => assert(Files.exists(Paths.get(s"$out/$t/_SUCCESS")), t))
+    assert(Files.exists(Paths.get(s"$out/stage3_templates.root")))
+
+    // every chain fails: the first failure is thrown, the others ride along
+    val empty = Files.createTempDirectory("graft_run_none").toString
+    val all = intercept[org.apache.spark.sql.AnalysisException](
+      RunPipeline.run(spark, empty, out))
+    assert(chainFailures(all).size == 3, all.getSuppressed.toSeq)
+    assert(pipelineThreads.isEmpty, s"still running: ${pipelineThreads.map(_.getName)}")
+  }
+
+  test("RunPipeline.main reports a failed run and exits 1") {
+    val in = Files.createTempDirectory("graft_run_main")
+    Files.createSymbolicLink(in.resolve("lineitem.parquet"),
+      Paths.get(s"$dir/lineitem.parquet"))
+    // present, so the input check passes, but no parquet schema to read
+    Files.createDirectory(in.resolve("orders.parquet"))
+    val stderr = in.resolve("stderr.txt").toFile
+    val jvmOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray(Array.empty[String]).filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ jvmOpens ++ Seq(
+      "-cp", sys.props("java.class.path"),
+      "graft.RunPipeline", in.toString, in.resolve("out").toString)
+    val pb = new ProcessBuilder(cmd: _*).redirectOutput(in.resolve("stdout.txt").toFile)
+      .redirectError(stderr)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val p = pb.start()
+    val finished = p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+    if (!finished) p.destroyForcibly().waitFor()
+    val err = Files.readString(stderr.toPath)
+    assert(finished && p.exitValue() == 1, s"exit ${if (finished) p.exitValue() else "timeout"}\n$err")
+    assert(err.linesIterator.exists(_.startsWith("graft.RunPipeline: failed: ")), err)
   }
 
   test("RunPipeline names the first missing input table") {

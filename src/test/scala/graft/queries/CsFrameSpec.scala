@@ -40,4 +40,24 @@ class CsFrameSpec extends SparkSpec {
     val corr = cov / (sx * sy)
     assert(corr > 0.5, s"correlation $corr between boost and simple CS forms")
   }
+
+  test("p14 resolves a near-tie of the beam dots the same way for pz = +-1e-14") {
+    import org.apache.spark.sql.functions.col
+    val s = spark
+    import s.implicits._
+    // eta1 = -eta2 = 0.2: the dimuon's pz is 0 up to the pt2 offset,
+    // which makes it about +1e-14 in one row and -1e-14 in the other
+    val rows = Seq(30.0 - 5e-14, 30.0 + 5e-14).map(pt2 => (pt2, 30.0, 0.2, 0.3, pt2, -0.2, 2.0, 1.0))
+      .toDF("key", "pt1", "eta1", "phi1", "pt2", "eta2", "phi2", "q2")
+    val out = CsFrameQueries.sparkLayers(rows)
+      .select(col("key"), col("pz"), col("cos_theta_cs_pisa"), col("phi_cs_pisa"))
+      .orderBy(col("key")).collect()
+    val pz = out.map(_.getDouble(1))
+    assert(pz(0) > 0 && pz(1) < 0 && pz.forall(p => math.abs(p) < 2e-14),
+      s"inputs are not a +-1e-14 mirror pair: pz ${pz.mkString(", ")}")
+    val Seq(a, b) = out.toSeq.map(r => (r.getDouble(2), r.getDouble(3)))
+    assert(math.abs(a._1) > 0.1, s"cos theta ${a._1} is too close to 0 to tell the branches apart")
+    assert(math.abs(a._1 - b._1) < 1e-9 && math.abs(a._2 - b._2) < 1e-9,
+      s"mirror rows differ: (cos, phi) $a vs $b")
+  }
 }

@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * mapping, and the broadcast posture of the weight table. */
 class RunsPrescanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private val runsDir = sys.env.getOrElse("GRAFT_FIXTURES_DIR",
-    "/root/repo/src/main/resources/fixtures") + "/runs"
+  private val runsDir = s"${graft.queries.fixturesRoot}/runs"
 
   private def runsRows = spark.read.format("root-tree")
     .option("path", runsDir).load()
