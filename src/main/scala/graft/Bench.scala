@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
   *
-  * Session mirrors the target deployment shape (local[32], 32 shuffle
-  * partitions, AQE on): partition counts sized to cores — not Spark's
-  * 200 default, which would fragment the small-SF runs — and AQE
-  * coalescing/skew handling enabled as it would be on a real cluster.
+  * It runs on [[GraftSession.mainSession]] with [[GraftSession.mainCores]]
+  * cores.
   */
 object Bench {
 
@@ -73,8 +69,8 @@ object Bench {
   /** Worker count of [[calibProbeMc]]: the configured core count,
     * at most 32 and at most the cores the JVM can run on. More workers
     * than cores would read as contention on a quiet host. */
-  private[graft] def mcThreadCount(cpus: String, available: Int): Int =
-    math.max(1, Seq(cpus.toIntOption.getOrElse(32), 32, available).min)
+  private[graft] def mcThreadCount(cpus: Int, available: Int): Int =
+    math.max(1, Seq(cpus, 32, available).min)
   private def calibProbeMc(threads: Int): Double = {
     val sinks = new java.util.concurrent.atomic.AtomicLong
     val t0 = System.nanoTime()
@@ -104,29 +100,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val calibBefore = calibProbe()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.mainCores("graft.Bench")
     val mcThreads = mcThreadCount(cpus, Runtime.getRuntime.availableProcessors)
     val calibMcBefore = calibProbeMc(mcThreads)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The 360-query suite compiles ~5-6k distinct codegen fragments;
-      // the default 100-entry compiled-class cache (static conf) evicts
-      // every one of them long before the tail-determinism rerun pass,
-      // so each rerun re-pays the janino compile it is trying to
-      // exclude (r15 measurement: ~100 flagged queries saved ~1 s each
-      // on rerun, a large part of it compile). Sized to hold the whole
-      // suite; same benefit for any production session that repeats
-      // its query shapes. First-pass times are unaffected (cold cache
-      // either way).
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.CodegenCacheEntries.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.mainSession(cpus, "WARN")
     // warm the JVM/codegen paths once so the first measured query does
     // not absorb session startup
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()

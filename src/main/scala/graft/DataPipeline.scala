@@ -144,15 +144,7 @@ object DataPipeline {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.mainSession(GraftSession.mainCores("graft.DataPipeline"), "WARN")
     val (packed, stats) = curate(spark, sfDir)
     packed.write.mode("overwrite").partitionBy("source").parquet(s"$outDir/corpus")
     stats.foreach { case (k, v) => println(s"[data-pipeline] $k: $v") }

@@ -51,16 +51,7 @@ object RunPipeline {
       System.err.println(s"graft.RunPipeline: missing input $f")
       sys.exit(2)
     }
-    val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val cpus = cpusEnv.toIntOption.filter(_ > 0).getOrElse {
-      System.err.println(s"graft.RunPipeline: SPARK_GRAFT_CPUS=$cpusEnv is not a core count")
-      sys.exit(2)
-    }
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.attach(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.mainSession(GraftSession.mainCores("graft.RunPipeline"), "WARN")
     val failure =
       try { run(spark, sfDir, outDir); None }
       catch { case NonFatal(e) => Some(e) }

@@ -91,7 +91,13 @@ object SparkEntry {
     families.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Omit for non-SQL-expressible ops. Builds
+    * every oracle, so a missing fixture throws `refData`'s error. */
   def oracleSql: Map[String, String] =
-    families.map(_.oracle).reduce(_ ++ _)
+    families.map(_.oracle.toMap).reduce(_ ++ _)
+
+  /** The oracles of the named queries only: an oracle derived from a
+    * fixture is built, and its file read, only when its query is named. */
+  def oracleSqlFor(names: Set[String]): Map[String, String] =
+    families.flatMap(f => names.flatMap(n => f.oracle.get(n).map(n -> _))).toMap
 }

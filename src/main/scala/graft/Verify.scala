@@ -17,22 +17,15 @@ object Verify {
     // optional dev-only filter; the driver always calls with 2 args
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    // oracles derived from reference fixtures are built here, before any
-    // query runs or any output is written: a missing fixture stops the
-    // run with refData's message naming the file
-    val oracles = try SparkEntry.oracleSql catch {
+    // the selected queries' oracles are built here, before any query
+    // runs or any output is written: a missing fixture stops the run
+    // with refData's message naming the file
+    val oracles = try only.fold(SparkEntry.oracleSql)(SparkEntry.oracleSqlFor) catch {
       case e: IllegalStateException =>
         System.err.println(s"graft.Verify: ${e.getMessage}")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.mainSession(GraftSession.mainCores("graft.Verify"), "WARN")
     new java.io.File(outDir).mkdirs()
     // warm the session once (Bench's convention) so the first query's
     // stderr timing is not inflated by codegen/broadcast machinery

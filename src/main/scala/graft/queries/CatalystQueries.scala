@@ -92,9 +92,9 @@ object CatalystQueries extends QueryFamily {
     "c04_gen_source" -> (c04 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "c01_native_histogram" -> c01Sql,
     "c02_native_delta_r" -> c02Sql,
     "c04_gen_source" -> c04Sql
-  )
+  ).view
 }

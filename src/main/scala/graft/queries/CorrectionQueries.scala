@@ -733,10 +733,9 @@ object CorrectionQueries extends QueryFamily {
     "l23_jec_data_residual" -> (l23 _)
   )
 
-  lazy val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = withDeferred(Map(
     "l20_btag_csv_real" -> l20Sql,
-    "l28_pu_file_reweight" -> l28Sql,
-    "l21_jec_levels_real" -> l21Sql,
-    "l23_jec_data_residual" -> l23Sql
-  )
+    "l28_pu_file_reweight" -> l28Sql),
+    "l21_jec_levels_real" -> (() => l21Sql),
+    "l23_jec_data_residual" -> (() => l23Sql))
 }

@@ -273,7 +273,7 @@ object CsFrameQueries extends QueryFamily {
     "p14_cs_pisa" -> (p14 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "p14_cs_pisa" -> p14Sql
-  )
+  ).view
 }

@@ -1063,7 +1063,7 @@ object CurationQueries extends QueryFamily {
     "d12_cc_converged" -> (d12 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "k09_hll_merge" -> k09Sql,
     "k08_hll_cube" -> k08Sql,
     "k06_hll_distinct" -> k06Sql,
@@ -1080,5 +1080,5 @@ object CurationQueries extends QueryFamily {
     "t16_leakage_safe_split" -> t16Sql,
     "a23_robust_outlier" -> a23Sql,
     "d12_cc_converged" -> d12Sql
-  )
+  ).view
 }

@@ -1668,7 +1668,7 @@ object DedupQueries extends QueryFamily {
     "d10_decontaminate" -> (d10 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "d25_lsh_recall_eval" -> d25Sql,
     "d24_substring_exact" -> d24Sql,
     "d23_novelty_score" -> d23Sql,
@@ -1689,5 +1689,5 @@ object DedupQueries extends QueryFamily {
     "d07_ppjoin_exact" -> d07Sql,
     "d09_substring_dup" -> d09Sql,
     "d10_decontaminate" -> d10Sql
-  )
+  ).view
 }

@@ -2095,7 +2095,7 @@ object FitQueries extends QueryFamily {
     "f05_pdf_selection" -> (f05 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "f24_fit_frame_pulls" -> f24Sql,
     "f23_nll_newton_fit" -> f23Sql,
     "f25_nll_fit_errors" -> f25Sql,
@@ -2121,5 +2121,5 @@ object FitQueries extends QueryFamily {
     "f03_profile_significance" -> f03Sql,
     "f04_impact_ranking" -> f04Sql,
     "f05_pdf_selection" -> f05Sql
-  )
+  ).view
 }

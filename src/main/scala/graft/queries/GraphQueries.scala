@@ -1259,7 +1259,7 @@ object GraphQueries extends QueryFamily {
     "g09_label_propagation" -> (g09 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "g16_assortativity" -> g16Sql,
     "g15_adamic_adar" -> g15Sql,
     "g14_modularity" -> g14Sql,
@@ -1272,5 +1272,5 @@ object GraphQueries extends QueryFamily {
     "g08_bfs_hops" -> g08Sql,
     "g09_label_propagation" -> g09Sql,
     "g10_hits" -> g10Sql
-  )
+  ).view
 }

@@ -240,10 +240,10 @@ object JaggedQueries extends QueryFamily {
     "g04_pair_combinations" -> (g04 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "g01_jagged_pipeline" -> g01Sql,
     "g02_jagged_index_ref" -> g02Sql,
     "g03_jagged_renest" -> g03Sql,
     "g04_pair_combinations" -> g04Sql
-  )
+  ).view
 }

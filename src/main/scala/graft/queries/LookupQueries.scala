@@ -4319,7 +4319,7 @@ object LookupQueries extends QueryFamily {
     "l12_jec_table_driven" -> (l12 _)
   )
 
-  lazy val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = withDeferred(Map(
     "l15_nnlops_interp" -> l15Sql,
     "l16_zpt_json_lookup" -> l16Sql,
     "l17_jec_unc_real" -> l17Sql,
@@ -4338,8 +4338,7 @@ object LookupQueries extends QueryFamily {
     "l04_jec_chain" -> l04Sql,
     "l05_flavor_poly" -> l05Sql,
     "l06_qgl_norm_poly" -> l06Sql,
-    "l07_rochester_branch" -> l07Sql,
-    "l10_jec_variant_columns" -> l10Sql,
-    "l12_jec_table_driven" -> l12Sql
-  )
+    "l07_rochester_branch" -> l07Sql),
+    "l10_jec_variant_columns" -> (() => l10Sql),
+    "l12_jec_table_driven" -> (() => l12Sql))
 }

@@ -2728,11 +2728,9 @@ object MLQueries extends QueryFamily {
     "m13_multiclass_bdt" -> (m13 _)
   )
 
-  lazy val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = withDeferred(Map(
     "m33_ablation_importance" -> m33Sql,
     "m34_fold_scalers" -> m34Sql,
-    "m35_vbf_dnn_real" -> m35Sql,
-    "m36_vbf_fold_ensemble" -> m36Sql,
     "m32_scaling_law" -> m32Sql,
     "m31_mannwhitney" -> m31Sql,
     "m30_gbdt_loop" -> m30Sql,
@@ -2764,6 +2762,7 @@ object MLQueries extends QueryFamily {
     "m02_feature_prep" -> m02Sql,
     "m03_mlp_forward" -> m03Sql,
     "m04_tree_ensemble" -> m04Sql,
-    "m13_multiclass_bdt" -> m13Sql
-  )
+    "m13_multiclass_bdt" -> m13Sql),
+    "m35_vbf_dnn_real" -> (() => m35Sql),
+    "m36_vbf_fold_ensemble" -> (() => m36Sql))
 }

@@ -912,7 +912,7 @@ object MiscQueries extends QueryFamily {
     "c03_signed_product_agg" -> (c03 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "a33_benford_digits" -> a33Sql,
     "j20_point_in_polygon" -> j20Sql,
     "j19_spatial_rule" -> j19Sql,
@@ -928,5 +928,5 @@ object MiscQueries extends QueryFamily {
     "r06_intersect" -> r06Sql,
     "r08_config_matrix" -> r08Sql,
     "c03_signed_product_agg" -> c03Sql
-  )
+  ).view
 }

@@ -901,7 +901,7 @@ object MultimodalQueries extends QueryFamily {
     "x05_shard_plan" -> (x05 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "x11_constellation_match" -> x11Sql,
     "x13_loudness" -> x13Sql,
     "x12_shot_boundaries" -> x12Sql,
@@ -915,5 +915,5 @@ object MultimodalQueries extends QueryFamily {
     "x03_decode_features" -> x03Sql,
     "x04_resize_shape" -> x04Sql,
     "x05_shard_plan" -> x05Sql
-  )
+  ).view
 }

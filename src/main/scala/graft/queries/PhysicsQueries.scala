@@ -835,7 +835,7 @@ object PhysicsQueries extends QueryFamily {
     "p24_nan_fill" -> (p24 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "p02_flag_and" -> p02Sql,
     "p03_trigger_or" -> p03Sql,
     "p04_lumimask_interval" -> p04Sql,
@@ -856,5 +856,5 @@ object PhysicsQueries extends QueryFamily {
     "p22_relabel" -> p22Sql,
     "p23_digitize" -> p23Sql,
     "p24_nan_fill" -> p24Sql
-  )
+  ).view
 }

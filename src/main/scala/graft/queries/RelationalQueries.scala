@@ -1024,7 +1024,7 @@ object RelationalQueries extends QueryFamily {
     "j08_broadcast_dim_join" -> (j08 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "r17_fifo_lots" -> r17Sql,
     "a32_expectations" -> a32Sql,
     "a27_column_profile" -> a27Sql,
@@ -1060,5 +1060,5 @@ object RelationalQueries extends QueryFamily {
     "j05_isolation_crossjoin" -> j05Sql,
     "j06_footprint_semijoin" -> j06Sql,
     "j08_broadcast_dim_join" -> j08Sql
-  )
+  ).view
 }

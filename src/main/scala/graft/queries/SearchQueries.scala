@@ -1465,7 +1465,7 @@ object SearchQueries extends QueryFamily {
     "k02_cms_estimate" -> (k02 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "k11_qsketch_merge" -> k11Sql,
     "w14_spell_correct" -> w14Sql,
     "k10_sketch_audit" -> k10Sql,
@@ -1486,5 +1486,5 @@ object SearchQueries extends QueryFamily {
     "w02_zorder_layout" -> w02Sql,
     "k01_cms_sketch" -> k01Sql,
     "k02_cms_estimate" -> k02Sql
-  )
+  ).view
 }

@@ -1139,7 +1139,7 @@ object SimilarityQueries extends QueryFamily {
     "v05_kmeans_ivf_train" -> (v05 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "v14_cluster_purity" -> v14Sql,
     "v13_filtered_ann" -> v13Sql,
     "v12_hard_negatives" -> v12Sql,
@@ -1155,5 +1155,5 @@ object SimilarityQueries extends QueryFamily {
     "v03_knn_ivf" -> v03Sql,
     "v04_knn_ivf_nprobe2" -> v04Sql,
     "v05_kmeans_ivf_train" -> v05Sql
-  )
+  ).view
 }

@@ -943,7 +943,7 @@ object StageQueries extends QueryFamily {
     "s06_variation_fanout" -> (s06 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "s13_cutflow" -> s13Sql,
     "s12_rebin_ratio" -> s12Sql,
     "s11_tree_scan" -> s11Sql,
@@ -957,5 +957,5 @@ object StageQueries extends QueryFamily {
     "s04_stage3_templates" -> s04Sql,
     "s05_unbinned_save" -> s05Sql,
     "s06_variation_fanout" -> s06Sql
-  )
+  ).view
 }

@@ -521,9 +521,8 @@ object StreamQueries extends QueryFamily {
     "n08_stream_left_outer" -> (n08 _)
   )
 
-  lazy val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = withDeferred(Map(
     "n13_watermark_audit" -> n13Sql,
-    "n14_stream_dnn_scoring" -> n14Sql,
     "n12_stream_root_sf" -> n12Sql,
     "n10_stream_hopping" -> n10Sql,
     "n09_stream_running_totals" -> n09Sql,
@@ -535,6 +534,6 @@ object StreamQueries extends QueryFamily {
     "n03_stream_dedup" -> n03Sql,
     "n04_stream_stream_join" -> n04Sql,
     "n05_stream_update_mode" -> n05Sql,
-    "n08_stream_left_outer" -> n08Sql
-  )
+    "n08_stream_left_outer" -> n08Sql),
+    "n14_stream_dnn_scoring" -> (() => n14Sql))
 }

@@ -2207,7 +2207,7 @@ object TemporalQueries extends QueryFamily {
     "a19_range_frame_window" -> (a19 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "u27_acf" -> u27Sql,
     "u28_pacf" -> u28Sql,
     "u29_ljung_box" -> u29Sql,
@@ -2250,5 +2250,5 @@ object TemporalQueries extends QueryFamily {
     "t07_text_normalize" -> t07Sql,
     "a18_exact_quantiles" -> a18Sql,
     "a19_range_frame_window" -> a19Sql
-  )
+  ).view
 }

@@ -1492,7 +1492,7 @@ object TextQueries extends QueryFamily {
     "t06_json_extract" -> (t06 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "t39_nb_confusion" -> t39Sql,
     "t36_heaps_law" -> t36Sql,
     "t37_tokenizer_fertility" -> t37Sql,
@@ -1521,5 +1521,5 @@ object TextQueries extends QueryFamily {
     "t04_fingerprint" -> t04Sql,
     "t05_shingles" -> t05Sql,
     "t06_json_extract" -> t06Sql
-  )
+  ).view
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Dev main: hub-regime diagnostics for the wedge family (round-12
@@ -23,14 +23,7 @@ object WedgeStats {
     val dir = args(0)
     val budget = if (args.length > 1) args(1).toLong else 4000000L
     val sqrtB = math.max(1L, math.sqrt(budget.toDouble).toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.mainSession(GraftSession.mainCores("graft.queries.WedgeStats"), "ERROR")
 
     val und = GraphQueries.coSupplyEdges(spark, dir)
     val nEdges = und.count()

@@ -271,9 +271,9 @@ object WeightVariationQueries extends QueryFamily {
     "l26_stxs_thu" -> (l26 _)
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: collection.MapView[String, String] = Map(
     "l27_pdf_mcreplica" -> l27Sql,
     "l25_lhe_scale_weights" -> l25Sql,
     "l26_stxs_thu" -> l26Sql
-  )
+  ).view
 }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.{AbstractMapView, MapView}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.classic.GraftBridge
@@ -79,11 +80,26 @@ package object queries {
     def queries: Map[String, (SparkSession, String) => DataFrame]
 
     /** DuckDB oracle SQL per query key. Creating a family reads no
-      * file: an oracle derived from a reference fixture (via
-      * [[refData]]) is built on first access (`lazy val`), so a missing
-      * fixture fails only the query or oracle that needs it, with
-      * `refData`'s message naming the file. */
-    def oracle: Map[String, String]
+      * file, and reading one key builds only that key's oracle: an
+      * oracle derived from a fixture (via [[refData]]) is built when
+      * its key is read (see [[withDeferred]]), so a missing fixture
+      * fails only the query or oracle that needs it, with `refData`'s
+      * message naming the file. Iterating the view builds them all. */
+    def oracle: MapView[String, String]
+
+    /** The `strict` oracles plus the `deferred` ones, each of which is
+      * built when its key is read. A deferred value should be a
+      * `lazy val`, so that reading it again costs nothing. */
+    protected def withDeferred(strict: Map[String, String],
+        deferred: (String, () => String)*): MapView[String, String] = {
+      val later = deferred.toMap
+      new AbstractMapView[String, String] {
+        def get(key: String): Option[String] =
+          strict.get(key).orElse(later.get(key).map(_()))
+        def iterator: Iterator[(String, String)] =
+          strict.iterator ++ later.iterator.map { case (k, v) => k -> v() }
+      }
+    }
     protected def t(dir: String, name: String): String = s"$dir/$name.parquet"
 
     /** Read a test table. `events.parquet` has carried an INT64

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev/ops entry: train a BPE merge list off a documents table and
   * print it as Scala literals — how the frozen vocabulary artifact in
@@ -15,13 +15,8 @@ object BpeTrainMain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val k = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.mainSession(
+      GraftSession.mainCores("graft.text.BpeTrainMain"), "WARN")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val merges = BpeTrainer.train(spark, docs, "text", k)
     println("MERGES_BEGIN")

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-table generator for scale rehearsals beyond
@@ -160,14 +161,7 @@ object GenSf {
     def fk(idCol: String, salt: Int, n: Long): String =
       if (zipfA == 0.0) s"CAST(pmod(xxhash64($idCol, $salt), $n) AS BIGINT)"
       else s"CAST(floor($n * pow(${u(idCol, salt)}, $zipfA)) AS BIGINT)"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.mainSession(GraftSession.mainCores("graft.tools.GenSf"), "WARN")
 
     val nLineitem = math.round(6000000L * sf).max(1000)
     val nOrders = math.round(1500000L * sf).max(250)

@@ -37,10 +37,9 @@ class BenchScriptSpec extends AnyFunSuite {
   * than its own oversubscription. */
 class McThreadCountSpec extends AnyFunSuite {
   test("calibration workers are clamped to the available cores") {
-    assert(Bench.mcThreadCount("32", 4) == 4)
-    assert(Bench.mcThreadCount("8", 16) == 8)
-    assert(Bench.mcThreadCount("64", 64) == 32)
-    assert(Bench.mcThreadCount("not-a-number", 2) == 2)
-    assert(Bench.mcThreadCount("4", 1) == 1)
+    assert(Bench.mcThreadCount(32, 4) == 4)
+    assert(Bench.mcThreadCount(8, 16) == 8)
+    assert(Bench.mcThreadCount(64, 64) == 32)
+    assert(Bench.mcThreadCount(4, 1) == 1)
   }
 }

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
-import org.apache.spark.sql.SparkSession
-
 /** Creating the query families reads no reference fixture. A JVM whose
   * reference data root does not exist must still initialise
   * `SparkEntry` and list every query; a query or oracle that needs a
@@ -61,9 +59,8 @@ object MissingFixturesProbe {
     val fixtureQueries = SparkSpec.queryFixtures.keySet
     println(s"queries ${qs.size}")
     println(s"fixture-queries-registered ${fixtureQueries.forall(qs.contains)}")
-    val spark = SparkSession.builder().master("local[1]")
+    val spark = GraftSession.builder("local[1]", 1)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

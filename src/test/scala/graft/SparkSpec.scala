@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.{Assertions, BeforeAndAfterAll}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. */
+/** Shared local SparkSession for specs, built as users build theirs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
@@ -12,18 +12,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[threads, maxTaskFailures]: allow one retry so specs can
-      // exercise task-retry semantics (AuditSinkSpec injects a failure)
-      .master("local[4,2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
+    // local[threads, maxTaskFailures]: allow one retry so specs can
+    // exercise task-retry semantics (AuditSinkSpec injects a failure)
+    val s = GraftSession.builder("local[4,2]", 4)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // repo invariant: sessions pin UTC at construction so timestamp
-      // casts (NTZ→epoch in normalizeEventTs) are timezone-stable
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
+    GraftSession.attach(s)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,30 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 import graft.physics.Kinematics
 import graft.agg.Histogrammer
 
 /** The injected native functions must agree with the composed-expression
   * baselines they accelerate. */
-class ExtensionsSpec extends AnyFunSuite {
-
-  // getOrCreate may return a pre-existing session (shared test JVM), in
-  // which case withExtensions is ignored — register at runtime instead,
-  // which is also the path the driver's session uses.
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(s)
-    s
-  }
+class ExtensionsSpec extends SparkSpec {
 
   test("GraftSession.attach registers all native functions on an existing session") {
     graft.GraftSession.attach(spark)
