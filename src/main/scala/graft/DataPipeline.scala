@@ -25,8 +25,6 @@ object DataPipeline {
   private val P = 2147483647L
 
   def curate(spark: SparkSession, sfDir: String): (DataFrame, Seq[(String, Long)]) = {
-    graft.plans.GraftFunctions.register(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       .repartition(spark.sparkContext.defaultParallelism)
     val stats = Seq.newBuilder[(String, Long)]

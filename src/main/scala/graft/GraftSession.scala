@@ -12,10 +12,17 @@ import graft.plans.{GraftExtensions, GraftFunctions}
   *
   * Every main and the test suite build their session here, so the
   * oracles and the tests check results under the configuration users
-  * run. It sets only what differs from Spark's defaults:
+  * run. The session carries graft's state from the start, and so do its
+  * `newSession()` children: [[GraftExtensions]] injects every function
+  * of `GraftFunctions.table`, the as-of join strategy and graft's
+  * optimizer rules. The query builders assume such a session: they
+  * register no function, add no rule and set none of the confs below.
+  * It sets only what differs from Spark's defaults:
   *  - shuffle partitions sized to cores, not Spark's 200 default —
   *    partition count should track parallelism, AQE coalesces up;
-  *  - parquet nanos-as-long: NanoAOD-era files carry TIMESTAMP(NANOS);
+  *  - parquet nanos-as-long: NanoAOD-era files carry TIMESTAMP(NANOS),
+  *    and so does the test data's `events.parquet`, which Spark 4
+  *    refuses to read without it;
   *  - a UTC session time zone, so timestamp casts do not depend on the
   *    host's zone;
   *  - a codegen cache of [[CodegenCacheEntries]] compiled classes:
@@ -50,9 +57,9 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .withExtensions(new GraftExtensions)
 
-  /** Register graft's native functions on an existing session (the
+  /** Registers the native functions an existing session lacks: the
     * withExtensions path is ignored by getOrCreate when a session
-    * already exists). Idempotent. */
+    * already exists. On a session this builder made it changes nothing. */
   def attach(s: SparkSession): Unit = GraftFunctions.register(s)
 
   /** The core count a main runs on, from the value of

@@ -96,6 +96,10 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     families.map(_.oracle.toMap).reduce(_ ++ _)
 
+  /** The key of every oracle, listed without building any. */
+  def oracleNames: Set[String] =
+    families.flatMap(_.oracle.keysIterator).toSet
+
   /** The oracles of the named queries only: an oracle derived from a
     * fixture is built, and its file read, only when its query is named. */
   def oracleSqlFor(names: Set[String]): Map[String, String] =

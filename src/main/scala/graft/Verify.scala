@@ -6,7 +6,8 @@ import java.util.Comparator
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * fails leaves no directory in `outDir` (see [[writeQuery]]); the run
   * still exits 0 and ends with one stderr line naming the failed
-  * queries. */
+  * queries. A query list that names an unknown query exits 2 before
+  * anything runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
@@ -17,6 +18,11 @@ object Verify {
     // optional dev-only filter; the driver always calls with 2 args
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
+    // a misspelt name stops the run before a session or any output exists
+    for (names <- only; unknown = names -- SparkEntry.queries.keySet if unknown.nonEmpty) {
+      System.err.println(s"graft.Verify: unknown query: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     // the selected queries' oracles are built here, before any query
     // runs or any output is written: a missing fixture stops the run
     // with refData's message naming the file

@@ -285,19 +285,14 @@ object AsOf {
            tolerance: Option[Long],
            negateTs: Boolean): DataFrame = {
     val spark = left.sparkSession
-    // GraftExtensions-built sessions already carry the strategy via
-    // injectPlannerStrategy; this is the fallback for plain sessions.
-    // The check-and-append is atomic so concurrent first callers cannot
-    // register the strategy twice.
+    // GraftExtensions-built sessions already carry the strategy and the
+    // rule; this is the fallback for plain sessions. The check-and-append
+    // is atomic so concurrent first callers cannot add either twice.
     spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsOfJoinStrategy
-      }
-      if (!spark.experimental.extraOptimizations.contains(AsOfJoinPruning)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ AsOfJoinPruning
-      }
+      if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
+        spark.experimental.extraStrategies :+= AsOfJoinStrategy
+      if (!spark.sessionState.optimizer.batches.exists(_.rules.contains(AsOfJoinPruning)))
+        spark.experimental.extraOptimizations :+= AsOfJoinPruning
     }
     val lPlan = GraftBridge.analyzed(left)
     val rPlan = GraftBridge.analyzed(right)

@@ -1,11 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions registering graft's native functions so they
-  * are usable from SQL text at session build:
+/** SparkSessionExtensions that put graft into every session they
+  * build: all of [[GraftFunctions.table]]'s functions, usable from SQL
+  * text, the as-of join strategy and graft's optimizer rules.
   *
   *   spark.builder.withExtensions(new GraftExtensions)
   *   // or: --conf spark.sql.extensions=graft.plans.GraftExtensions
@@ -13,78 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   SELECT delta_r(eta1, phi1, eta2, phi2) ...
   *   SELECT weighted_histogram(mass, w, 0.0, 160.0, 40) ...
   *
-  * For an already-built session use GraftFunctions.register(spark).
+  * A child of such a session (`spark.newSession()`) carries the same
+  * extensions. For a session built without them use
+  * `GraftSession.attach(spark)`, which adds the functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("pcm_decode"),
-      new ExpressionInfo(classOf[PcmDecode].getName, "pcm_decode"),
-      GraftFunctions.pcmDecodeBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("delta_r"),
-      new ExpressionInfo(classOf[DeltaRExpr].getName, "delta_r"),
-      GraftFunctions.deltaRBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpr].getName, "jaro_winkler"),
-      GraftFunctions.jaroWinklerBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("within_radius"),
-      new ExpressionInfo(classOf[WithinRadius].getName, "within_radius"),
-      GraftFunctions.withinRadiusBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("hyperplane_bands"),
-      new ExpressionInfo(classOf[HyperplaneBands].getName, "hyperplane_bands"),
-      GraftFunctions.hyperplaneBandsBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("weighted_histogram"),
-      new ExpressionInfo(classOf[WeightedHistogramAgg].getName, "weighted_histogram"),
-      GraftFunctions.weightedHistogramBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      GraftFunctions.sortedIntersectBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDotProduct].getName, "array_dot"),
-      GraftFunctions.arrayDotBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      GraftFunctions.minHashSigBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleHashSet].getName, "shingle_set"),
-      GraftFunctions.shingleSetBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("mlp_dense"),
-      new ExpressionInfo(classOf[MlpDenseChunked].getName, "mlp_dense"),
-      GraftFunctions.mlpDenseBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("kmv_minima"),
-      new ExpressionInfo(classOf[KmvMinima].getName, "kmv_minima"),
-      GraftFunctions.kmvMinimaBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("topk_max"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "topk_max"),
-      GraftFunctions.topkMaxBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("cdc_bounds"),
-      new ExpressionInfo(classOf[CdcBounds].getName, "cdc_bounds"),
-      GraftFunctions.cdcBoundsBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("hll_registers"),
-      new ExpressionInfo(classOf[HllRegisters].getName, "hll_registers"),
-      GraftFunctions.hllRegistersBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("hll_estimate"),
-      new ExpressionInfo(classOf[HllEstimate].getName, "hll_estimate"),
-      GraftFunctions.hllEstimateBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("phash_hash"),
-      new ExpressionInfo(classOf[PhashHash].getName, "phash_hash"),
-      GraftFunctions.phashHashBuilder))
+    GraftFunctions.table.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
     // whole-operator extension (SURVEY §2.7 path c): as-of join planning
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // custom optimizer rule: column pruning through the as-of node

@@ -1,12 +1,22 @@
 package graft.plans
 
+import scala.reflect.{ClassTag, classTag}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Runtime registration of graft's native functions into an existing
-  * session — the path for sessions not built with GraftExtensions
-  * (e.g. the driver's). Idempotent. */
+/** One native function: its SQL name, the expression class its
+  * `ExpressionInfo` names, and the builder the analyzer calls with the
+  * call's arguments. */
+final case class NativeFunction(name: String, className: String,
+    builder: Seq[Expression] => Expression) {
+  def id: FunctionIdentifier = FunctionIdentifier(name)
+  def info: ExpressionInfo = new ExpressionInfo(className, name)
+}
+
+/** graft's native functions, in one table that [[GraftExtensions]]
+  * injects into every session it builds and [[register]] adds to a
+  * session built without it. */
 object GraftFunctions {
 
   private def evalDouble(e: Expression): Double = e.eval(null) match {
@@ -16,38 +26,7 @@ object GraftFunctions {
       s"expected numeric literal, got $other")
   }
 
-  val deltaRBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 4, "delta_r(eta1, phi1, eta2, phi2)")
-    DeltaRExpr(children(0), children(1), children(2), children(3))
-  }
-
-  val weightedHistogramBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 5,
-      "weighted_histogram(value, weight, lo, hi, nbins)")
-    WeightedHistogramAgg(children(0), children(1), evalDouble(children(2)),
-      evalDouble(children(3)), evalDouble(children(4)).toInt)
-      .toAggregateExpression()
-  }
-
-  val sortedIntersectBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "sorted_intersect_count(a, b)")
-    SortedIntersectCount(children(0), children(1))
-  }
-
-  val arrayDotBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "array_dot(a, b)")
-    ArrayDotProduct(children(0), children(1))
-  }
-
-  val minHashSigBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "minhash_sig(shingles, n_perm)")
-    MinHashSignature(children(0), evalDouble(children(1)).toInt)
-  }
-
-  val shingleSetBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "shingle_set(text, k)")
-    ShingleHashSet(children(0), evalDouble(children(1)).toInt)
-  }
+  private def evalInt(e: Expression): Int = evalDouble(e).toInt
 
   // weights/bias arrive as foldable array(...) literals; element-wise eval
   // (rather than evaluating the CreateArray whole) sidesteps type-coercion
@@ -69,74 +48,18 @@ object GraftFunctions {
       s"mlp_dense weights/bias must be foldable array literals, got $other")
   }
 
-  val mlpDenseBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 4, "mlp_dense(input, weights, bias, tanh)")
-    MlpDenseChunked(children(0), evalDoubleArray(children(1)),
-      evalDoubleArray(children(2)),
-      children(3).eval(null).asInstanceOf[Boolean])
-  }
-
-  val kmvMinimaBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "kmv_minima(hash, k)")
-    KmvMinima(children(0), evalDouble(children(1)).toInt).toAggregateExpression()
-  }
-
-  val topkMaxBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 3, "topk_max(sort, payload, k)")
-    TopKPairs(children(0), children(1), evalDouble(children(2)).toInt)
-      .toAggregateExpression()
-  }
-
-  val cdcBoundsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 3, "cdc_bounds(text, window, mask)")
-    CdcBounds(children(0), evalDouble(children(1)).toInt,
-      evalDouble(children(2)).toInt)
-  }
-
-  val hllRegistersBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "hll_registers(hash, p)")
-    HllRegisters(children(0), evalDouble(children(1)).toInt)
-      .toAggregateExpression()
-  }
-
-  val qsketchBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "qsketch_buckets(value)")
-    LogQuantileSketch(children(0)).toAggregateExpression()
-  }
-
-  val hllEstimateBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "hll_estimate(regs)")
-    HllEstimate(children(0))
-  }
-
-  val phashHashBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "phash_hash(blob)")
-    PhashHash(children(0))
-  }
-
-  val pcmDecodeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "pcm_decode(blob)")
-    PcmDecode(children(0))
-  }
-
-  val byteValuesBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "byte_values(blob)")
-    ByteValues(children(0))
-  }
-
-  val sortedLowerCountBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "sorted_lower_count(x, sorted_lows_array)")
-    require(children(1).foldable,
+  private def sortedLows(lowsExpr: Expression): Seq[Double] = {
+    require(lowsExpr.foldable,
       "sorted_lower_count: lows must be a literal (foldable) array")
-    val et = children(1).dataType match {
+    val et = lowsExpr.dataType match {
       case org.apache.spark.sql.types.ArrayType(e, _) => e
       case other => throw new IllegalArgumentException(
         s"sorted_lower_count: second arg must be an array, got $other")
     }
-    val lowsData = children(1).eval()
+    val lowsData = lowsExpr.eval()
     if (lowsData == null) throw new IllegalArgumentException(
       "sorted_lower_count: lows must be a non-null literal array")
-    val lows = lowsData
+    lowsData
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toObjectArray(et)
       .map {
@@ -145,108 +68,62 @@ object GraftFunctions {
         case other => throw new IllegalArgumentException(
           s"sorted_lower_count: non-numeric lows element $other")
       }.toSeq
-    SortedLowerCount(children(0), lows)
   }
 
-  val jaroWinklerBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2, "jaro_winkler(a, b)")
-    JaroWinklerExpr(children(0), children(1))
-  }
+  /** A table entry for `name`, whose calls take `arity` arguments and
+    * build an `E`; a call with another count fails naming `usage`. */
+  private def fn[E <: Expression: ClassTag](name: String, usage: String, arity: Int)(
+      build: Seq[Expression] => Expression): NativeFunction =
+    NativeFunction(name, classTag[E].runtimeClass.getName, { c =>
+      require(c.size == arity, s"$name($usage)")
+      build(c)
+    })
 
-  val withinRadiusBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 5, "within_radius(ax, ay, bx, by, r)")
-    WithinRadius(children(0), children(1), children(2), children(3), children(4))
-  }
+  /** Every native function graft provides. */
+  val table: Seq[NativeFunction] = Seq(
+    fn[JaroWinklerExpr]("jaro_winkler", "a, b", 2)(c => JaroWinklerExpr(c(0), c(1))),
+    fn[WithinRadius]("within_radius", "ax, ay, bx, by, r", 5)(c =>
+      WithinRadius(c(0), c(1), c(2), c(3), c(4))),
+    fn[HyperplaneBands]("hyperplane_bands",
+        "embedding, n_tables, band_bits, dims, seed_base", 5)(c =>
+      HyperplaneBands(c(0), evalInt(c(1)), evalInt(c(2)), evalInt(c(3)), evalInt(c(4)))),
+    fn[DeltaRExpr]("delta_r", "eta1, phi1, eta2, phi2", 4)(c =>
+      DeltaRExpr(c(0), c(1), c(2), c(3))),
+    fn[SortedIntersectCount]("sorted_intersect_count", "a, b", 2)(c =>
+      SortedIntersectCount(c(0), c(1))),
+    fn[ArrayDotProduct]("array_dot", "a, b", 2)(c => ArrayDotProduct(c(0), c(1))),
+    fn[WeightedHistogramAgg]("weighted_histogram", "value, weight, lo, hi, nbins", 5)(c =>
+      WeightedHistogramAgg(c(0), c(1), evalDouble(c(2)), evalDouble(c(3)), evalInt(c(4)))
+        .toAggregateExpression()),
+    fn[MinHashSignature]("minhash_sig", "shingles, n_perm", 2)(c =>
+      MinHashSignature(c(0), evalInt(c(1)))),
+    fn[ShingleHashSet]("shingle_set", "text, k", 2)(c => ShingleHashSet(c(0), evalInt(c(1)))),
+    fn[MlpDenseChunked]("mlp_dense", "input, weights, bias, tanh", 4)(c =>
+      MlpDenseChunked(c(0), evalDoubleArray(c(1)), evalDoubleArray(c(2)),
+        c(3).eval(null).asInstanceOf[Boolean])),
+    fn[KmvMinima]("kmv_minima", "hash, k", 2)(c =>
+      KmvMinima(c(0), evalInt(c(1))).toAggregateExpression()),
+    fn[TopKPairs]("topk_max", "sort, payload, k", 3)(c =>
+      TopKPairs(c(0), c(1), evalInt(c(2))).toAggregateExpression()),
+    fn[CdcBounds]("cdc_bounds", "text, window, mask", 3)(c =>
+      CdcBounds(c(0), evalInt(c(1)), evalInt(c(2)))),
+    fn[HllRegisters]("hll_registers", "hash, p", 2)(c =>
+      HllRegisters(c(0), evalInt(c(1))).toAggregateExpression()),
+    fn[LogQuantileSketch]("qsketch_buckets", "value", 1)(c =>
+      LogQuantileSketch(c(0)).toAggregateExpression()),
+    fn[HllEstimate]("hll_estimate", "regs", 1)(c => HllEstimate(c(0))),
+    fn[PhashHash]("phash_hash", "blob", 1)(c => PhashHash(c(0))),
+    fn[PcmDecode]("pcm_decode", "blob", 1)(c => PcmDecode(c(0))),
+    fn[ByteValues]("byte_values", "blob", 1)(c => ByteValues(c(0))),
+    fn[SortedLowerCount]("sorted_lower_count", "x, sorted_lows_array", 2)(c =>
+      SortedLowerCount(c(0), sortedLows(c(1)))))
 
-  val hyperplaneBandsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 5,
-      "hyperplane_bands(embedding, n_tables, band_bits, dims, seed_base)")
-    HyperplaneBands(children(0), evalDouble(children(1)).toInt,
-      evalDouble(children(2)).toInt, evalDouble(children(3)).toInt,
-      evalDouble(children(4)).toInt)
-  }
-
+  /** Registers each function of [[table]] that `s` does not already
+    * have. A session built with [[GraftExtensions]] has them all, so on
+    * it this changes nothing. */
   def register(s: SparkSession): Unit = synchronized {
     val reg = s.sessionState.functionRegistry
-    reg.registerFunction(
-      new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpr].getName, "jaro_winkler"),
-      jaroWinklerBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("within_radius"),
-      new ExpressionInfo(classOf[WithinRadius].getName, "within_radius"),
-      withinRadiusBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("hyperplane_bands"),
-      new ExpressionInfo(classOf[HyperplaneBands].getName, "hyperplane_bands"),
-      hyperplaneBandsBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("delta_r"),
-      new ExpressionInfo(classOf[DeltaRExpr].getName, "delta_r"),
-      deltaRBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      sortedIntersectBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDotProduct].getName, "array_dot"),
-      arrayDotBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("weighted_histogram"),
-      new ExpressionInfo(classOf[WeightedHistogramAgg].getName, "weighted_histogram"),
-      weightedHistogramBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      minHashSigBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleHashSet].getName, "shingle_set"),
-      shingleSetBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("mlp_dense"),
-      new ExpressionInfo(classOf[MlpDenseChunked].getName, "mlp_dense"),
-      mlpDenseBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("kmv_minima"),
-      new ExpressionInfo(classOf[KmvMinima].getName, "kmv_minima"),
-      kmvMinimaBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("topk_max"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "topk_max"),
-      topkMaxBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("cdc_bounds"),
-      new ExpressionInfo(classOf[CdcBounds].getName, "cdc_bounds"),
-      cdcBoundsBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("hll_registers"),
-      new ExpressionInfo(classOf[HllRegisters].getName, "hll_registers"),
-      hllRegistersBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("qsketch_buckets"),
-      new ExpressionInfo(classOf[LogQuantileSketch].getName, "qsketch_buckets"),
-      qsketchBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("hll_estimate"),
-      new ExpressionInfo(classOf[HllEstimate].getName, "hll_estimate"),
-      hllEstimateBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("phash_hash"),
-      new ExpressionInfo(classOf[PhashHash].getName, "phash_hash"),
-      phashHashBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("pcm_decode"),
-      new ExpressionInfo(classOf[PcmDecode].getName, "pcm_decode"),
-      pcmDecodeBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("byte_values"),
-      new ExpressionInfo(classOf[ByteValues].getName, "byte_values"),
-      byteValuesBuilder)
-    reg.registerFunction(
-      new FunctionIdentifier("sorted_lower_count"),
-      new ExpressionInfo(classOf[SortedLowerCount].getName, "sorted_lower_count"),
-      sortedLowerCountBuilder)
+    table.filterNot(f => reg.functionExists(f.id))
+      .foreach(f => reg.registerFunction(f.id, f.info, f.builder))
   }
 }

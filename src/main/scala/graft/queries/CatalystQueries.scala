@@ -2,25 +2,22 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.GraftExtensions
 import graft.sources.GenSource
 
 /** Queries exercising graft's native Catalyst functions (delta_r with
   * doGenCode, the single-pass TypedImperativeAggregate histogram),
   * oracle-checked against the composed-expression SQL they replace.
-  * Functions are registered into the running session's FunctionRegistry
-  * so the driver's session needs no special build flags.
+  * The builders call the functions from SQL text, so they assume a
+  * session that has them: one built by `GraftSession` (or with
+  * `spark.sql.extensions=graft.plans.GraftExtensions`), or one that
+  * `GraftSession.attach` was called on.
   */
 object CatalystQueries extends QueryFamily {
-
-  private def ensureRegistered(s: SparkSession): Unit =
-    if (!s.catalog.functionExists("delta_r")) graft.plans.GraftFunctions.register(s)
 
   // ---- c01: native single-pass histogram ---------------------------------
   // Same result as the groupBy(width_bucket) form (a10) but the shuffle
   // carries ONE row per group holding the whole bin vector.
   private def c01(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     rd(s, dir, "orders").createOrReplaceTempView("c01_orders")
     s.sql(
       """SELECT bin, CAST(value AS FLOAT) AS value, CAST(sumw2 AS FLOAT) AS sumw2
@@ -41,7 +38,6 @@ object CatalystQueries extends QueryFamily {
 
   // ---- c02: native codegen delta_r ---------------------------------------
   private def c02(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     rd(s, dir, "events").createOrReplaceTempView("c02_events")
     s.sql(
       """SELECT event_id,

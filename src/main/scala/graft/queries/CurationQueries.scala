@@ -38,7 +38,6 @@ object CurationQueries extends QueryFamily {
   private val kmvKey =
     s"user_id * 1024 + ((CAST(floor(value * 10) AS BIGINT) % 1024 + 1024) % 1024)"
   private def k04(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val e = rd(s, dir, "events")
     e.groupBy(col("event_type"))
       .agg(
@@ -81,7 +80,6 @@ object CurationQueries extends QueryFamily {
   // division — bit-identical across engines.
   private val kmvTypeA = "click"; private val kmvTypeB = "purchase"
   private def k05(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val e = rd(s, dir, "events")
     val keyed = e.filter(col("event_type").isin(kmvTypeA, kmvTypeB))
       .select(col("event_type"), expr(kmvKey).as("k"), expr(mix(kmvKey)).as("hv"))
@@ -835,7 +833,6 @@ object CurationQueries extends QueryFamily {
   private val hllM = 1 << hllP // 512
   private val hllAlpha = 0.7213 / (1.0 + 1.079 / hllM)
   private def k06(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val e = rd(s, dir, "events")
     val sumExpr = // Σ 2^-M_j : every term a power of two — exact in double
       "aggregate(regs_arr, CAST(0 AS DOUBLE), (acc, r) -> acc + power(2.0D, -r))"
@@ -915,7 +912,6 @@ object CurationQueries extends QueryFamily {
   // accuracy witness. gid mirrors Spark's grouping_id() bit order,
   // derived from output nulls (source dims are never null).
   private def k08(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val e = rd(s, dir, "events").withColumn("seg", col("user_id") % 3)
     val sumExpr =
       "aggregate(regs_arr, CAST(0 AS DOUBLE), (acc, r) -> acc + power(2.0D, -r))"
@@ -990,7 +986,6 @@ object CurationQueries extends QueryFamily {
   // 53 bits), so the estimator agrees bit-for-bit too.
   private val nsPerDayK = 86400000000000L
   private def k09(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val e = rd(s, dir, "events")
       .withColumn("day", expr(s"ts div $nsPerDayK"))
     val daily = e.groupBy(col("event_type"), col("day"))

@@ -159,7 +159,6 @@ object DedupQueries extends QueryFamily {
   }
 
   private def d02(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     // the source is one small file (= one input split) but both the
     // shingle build and the pairwise probe are compute-bound: spread the
@@ -294,7 +293,6 @@ object DedupQueries extends QueryFamily {
   private def permA(k: Int): Long = 2L * k + 3
   private def permB(k: Int): Long = 7919L * k + 1
   private def d03(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     // sh as its own projection, referenced 9 times below: multiple
     // references to a non-cheap alias stop CollapseProject from inlining
@@ -399,7 +397,6 @@ object DedupQueries extends QueryFamily {
   private val ppNum = 4; private val ppDen = 5
   private val PackDf = 4294967296L // 2^32
   private def d07(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val docs = d.repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), expr(shinglesSpark).as("sh"))
@@ -549,7 +546,6 @@ object DedupQueries extends QueryFamily {
   // signatures are near-dup candidates (n_bucket counts them).
   private val simBits = 16
   private def d04(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val base = d.select(col("doc_id"), expr(shinglesSpark).as("sh"))
     val bitSums: Seq[Column] = (0 until simBits).map { j =>
@@ -605,7 +601,6 @@ object DedupQueries extends QueryFamily {
     bits.mkString("(", " + ", ")")
   }
   private def d05(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // native loop (plans.HyperplaneBands): the unrolled array(CASE…)
     // form is 8·2·16 element_at multiply terms — ONE projection method
     // past janino's 64 KB limit, which silently dropped 4 of d05's 5
@@ -782,7 +777,6 @@ object DedupQueries extends QueryFamily {
   // pairs back to the shingle table, as in d03.
   private val batchMod = 10; private val batchRem = 7
   private def d13(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     // one scan builds hash + shingles + signatures for BOTH sides
     val base0 = d.repartition(s.sparkContext.defaultParallelism)
@@ -967,7 +961,6 @@ object DedupQueries extends QueryFamily {
     (0 until cdcW).map(charAt)
       .foldLeft("CAST(0 AS BIGINT)")((acc, ch) => s"($acc * 31 + $ch)")
   private def d16(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     // boundary at i (1-based, i ≥ w) iff mix(horner(text[i-7..i])) % 32 == 0
     // — native one-pass rolling scan (plans/CdcBounds.scala), arithmetic-
@@ -1040,7 +1033,6 @@ object DedupQueries extends QueryFamily {
   private val containThresh = 0.9
   private val containBandRows = 4
   private def d17(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val docs = d.repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), expr(shinglesSpark).as("sh"))
@@ -1120,7 +1112,6 @@ object DedupQueries extends QueryFamily {
   private val d19Confs = Seq((12, 1), (6, 2), (4, 3), (3, 4), (2, 6), (1, 12))
   private val d19Thresh = 0.5
   private def d19(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents").filter(col("source") === "src0")
     val base0 = d.repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), expr(shinglesSpark).as("sh"))
@@ -1277,7 +1268,6 @@ object DedupQueries extends QueryFamily {
   // is ≤ |sources|² rows at any corpus size. Jaccard from three exact
   // integers, one division, float32.
   private def d20(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val sg = d.select(col("source"), explode(expr(shinglesSpark)).as("g"))
       .distinct()
@@ -1330,7 +1320,6 @@ object DedupQueries extends QueryFamily {
   // aggregated side; estimator error ~1/sqrt(K).
   private val srcPerms = 16
   private def d21(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val base = d.repartition(s.sparkContext.defaultParallelism)
       .select(col("source"), expr(shinglesSpark).as("sh"))
@@ -1521,7 +1510,6 @@ object DedupQueries extends QueryFamily {
   // as the full corpus does (and better than a prefix on real data).
   private val d25SliceCap = 5000
   private def d25(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val all = rd(s, dir, "documents")
     // one count() action just to pick the slice rate (O(metadata) work;
     // same value the SQL oracle derives via its scalar subquery)

@@ -141,7 +141,6 @@ object MLQueries extends QueryFamily {
     Array.tabulate(mlpDims.last)(j => q6(math.sin(j * 2.1 + 0.5) / math.sqrt(mlpDims.last.toDouble)))
   private val mlpBOut: Double = 0.1
   private def m03(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // The 128/64/32 forward pass is compute-bound; fan out ONLY when
     // the scan under-splits the core count (one-file test source).
     // Same guarded spelling as m35 — a blanket repartition is a full
@@ -2559,7 +2558,7 @@ object MLQueries extends QueryFamily {
     * arrays of the SAME %.6f-rounded doubles the oracle text carries —
     * skipping the SQL parser for the ~17k weight tokens (measured:
     * 23.8 s one-shot via expr text vs ~1 s warm; the parse was the
-    * cost, not the math). Requires GraftFunctions registered. */
+    * cost, not the math). */
   private[queries] def vbfScore(h0: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     vbfScoreFor(h0, 0)
   private[queries] def vbfScoreFor(h0: org.apache.spark.sql.Column,
@@ -2575,7 +2574,6 @@ object MLQueries extends QueryFamily {
     lit(1.0) / (lit(1.0) + exp(negate(out)))
   }
   private def m35(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // The forward pass is compute-bound (3 dense layers/row), so the
     // plan must parallelize across cores. At bench SF the events table
     // is ONE parquet split -> a blanket repartition was a full shuffle
@@ -2662,7 +2660,6 @@ object MLQueries extends QueryFamily {
       .otherwise(sigmFor(3))
   }
   private def m36(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val ev0 = rd(s, dir, "events")
     val par = s.sparkContext.defaultParallelism
     val ev = if (ev0.rdd.getNumPartitions < par) ev0.repartition(par) else ev0

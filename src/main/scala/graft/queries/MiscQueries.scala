@@ -539,7 +539,6 @@ object MiscQueries extends QueryFamily {
     "hot gera", "large pltae", "cold palte", "new gzmo", "smal plate",
     "bleu gear", "hot plat")
   private def j18(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     import s.implicits._
     val probes = fuzzyProbes.toDF("probe")
     val names = rd(s, dir, "part").select(col("p_name").as("name")).distinct()
@@ -723,7 +722,6 @@ object MiscQueries extends QueryFamily {
   // firing). Same hash-scattered point cloud as d22, smaller slice.
   private val spatialR = 1.5
   private def j19(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val pts = rd(s, dir, "events")
       .filter(col("user_id") < 30)
       .select(col("event_id").as("id"),
@@ -733,11 +731,6 @@ object MiscQueries extends QueryFamily {
     val b = pts.select(col("id").as("b_id"), col("x").as("bx"), col("y").as("by"))
     val key = graft.plans.SpatialJoinRewrite.EnabledConf
     val prev = s.conf.getOption(key)
-    s.experimental.synchronized {
-      if (!s.experimental.extraOptimizations.contains(graft.plans.SpatialJoinRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.SpatialJoinRewrite
-    }
     s.conf.set(key, "true")
     try {
       a.join(b, expr(s"within_radius(ax, ay, bx, by, ${spatialR}D)") &&

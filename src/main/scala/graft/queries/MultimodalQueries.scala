@@ -315,7 +315,6 @@ object MultimodalQueries extends QueryFamily {
     * native expression generates a compact LOOP over the referenced
     * weight matrix and stays inside whole-stage codegen. */
   private[graft] def phashHashes(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val nBytes = phashN * phashN
     d.filter(octet_length(expr("encode(text, 'UTF-8')")) >= nBytes)
@@ -401,7 +400,6 @@ object MultimodalQueries extends QueryFamily {
     * The localCheckpoint is the inline barrier; at cluster scale it is
     * the materialized decode output every media pipeline persists. */
   private def pcmSamples(s: SparkSession, dir: String, minBytes: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val nb = "octet_length(encode(text, 'UTF-8'))"
     // native pcm_decode (plans/PcmDecode.scala): a codegen'd tight loop
@@ -543,7 +541,6 @@ object MultimodalQueries extends QueryFamily {
   private val shotFrame = 16
   private val shotThresh = 6L
   private def x12(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val d = rd(s, dir, "documents")
     val nb = "octet_length(encode(text, 'UTF-8'))"
     // two-level transform: decode the blob's bytes ONCE (native

@@ -754,7 +754,6 @@ object RelationalQueries extends QueryFamily {
   // aggregate's set semantics, mirrored in the oracle (the synthetic
   // lineitem can repeat (orderkey, linenumber, price)).
   private def a28(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val li = rd(s, dir, "lineitem")
     li.groupBy(col("l_orderkey"))
       .agg(expr(

@@ -507,7 +507,6 @@ object SearchQueries extends QueryFamily {
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(generate_series(1, len($x)), " +
       s"i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE))), (acc, v) -> acc + v)"
   private def cosRanked(s: SparkSession, dir: String, qId: Int, topK: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val e = rd(s, dir, "embeddings")
       .withColumn("norm", sqrt(expr("array_dot(embedding, embedding)")))
     val q = e.filter(col("vec_id") === qId)
@@ -775,7 +774,6 @@ object SearchQueries extends QueryFamily {
   // construction (accuracy against exact quantiles is asserted in
   // LogQuantileSketchSpec).
   private def k07(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     rd(s, dir, "lineitem").createOrReplaceTempView("k07_li")
     s.sql(
       """WITH sk AS (
@@ -838,7 +836,6 @@ object SearchQueries extends QueryFamily {
   // [0, 1112]. Integer arithmetic end-to-end (error in basis points
   // from exact longs).
   private def k10(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     rd(s, dir, "lineitem").createOrReplaceTempView("k10_li")
     s.sql(
       """WITH sk AS (
@@ -1052,7 +1049,6 @@ object SearchQueries extends QueryFamily {
   private val mmrN = 20
   private val mmrK = 5
   private def w11(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     import s.implicits._
     val cands = bm25Ranked(s, dir).filter(col("rank") <= mmrN)
       .select(col("doc_id"),
@@ -1279,7 +1275,6 @@ object SearchQueries extends QueryFamily {
   // n_mismatch must be 0. The merge is exact integer algebra, so this
   // is an identity, not an approximation.
   private def k11(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     rd(s, dir, "lineitem").createOrReplaceTempView("k11_li")
     s.sql(
       """WITH parts AS (

@@ -25,7 +25,6 @@ object SimilarityQueries extends QueryFamily {
   /** Embeddings with a precomputed norm; cosine uses the native
     * codegen'd array_dot (bit-identical to the oracle's left fold). */
   private def withNorm(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     rd(s, dir, "embeddings")
       .withColumn("norm", sqrt(expr("array_dot(embedding, embedding)")))
   }
@@ -796,7 +795,6 @@ object SimilarityQueries extends QueryFamily {
   // Determinism: sqrt/sign arithmetic from array_dot's exact fold,
   // dot cast float32 before ranking, c_id tie-break.
   private def v11(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val base = rd(s, dir, "embeddings")
       .withColumn("norm_sq", expr("array_dot(embedding, embedding)"))
     val m2 = base.agg(max(col("norm_sq")).as("m2"))

@@ -304,7 +304,7 @@ object StreamQueries extends QueryFamily {
   private lazy val sfFixture =
     refData("muon_sf/year2018/RunABCD_SF_ID.root")
   private def n12(s: SparkSession, dir: String): DataFrame =
-    Streams.withDriveConfs(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, statePartitions(s)) {
       val schema = s.read.parquet(s"$dir/events.parquet").schema
       val sfMap = s.read.format("root-hist").option("path", sfFixture).load()
         .filter(col("hist") === "NUM_TightID_DEN_genTracks_pt_abseta" &&
@@ -455,8 +455,7 @@ object StreamQueries extends QueryFamily {
   // batch SQL replay of the same four forward chains (the n-family
   // convention: streaming answers must equal the batch answers).
   private def n14(s: SparkSession, dir: String): DataFrame =
-    Streams.withDriveConfs(s, statePartitions(s)) {
-      graft.plans.GraftFunctions.register(s)
+    Streams.withStatePartitions(s, statePartitions(s)) {
       val schema = s.read.parquet(s"$dir/events.parquet").schema
       val name = fresh("graft_stream_dnn")
       // the ensemble as a 4-way filtered UNION, not one 4-branch

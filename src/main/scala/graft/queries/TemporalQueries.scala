@@ -838,11 +838,6 @@ object TemporalQueries extends QueryFamily {
         expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)").as("x"))
     val key = graft.plans.RangeJoinRewrite.WidthConf
     val prev = s.conf.getOption(key)
-    s.experimental.synchronized {
-      if (!s.experimental.extraOptimizations.contains(graft.plans.RangeJoinRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.RangeJoinRewrite
-    }
     s.conf.set(key, "4096") // ~ median band width: ≤ 2 buckets/interval
     try {
       iv.join(pt, col("lo") <= col("x") && col("x") < col("hi"))

@@ -84,7 +84,8 @@ package object queries {
       * oracle derived from a fixture (via [[refData]]) is built when
       * its key is read (see [[withDeferred]]), so a missing fixture
       * fails only the query or oracle that needs it, with `refData`'s
-      * message naming the file. Iterating the view builds them all. */
+      * message naming the file. Iterating the view builds them all;
+      * listing its keys builds none. */
     def oracle: MapView[String, String]
 
     /** The `strict` oracles plus the `deferred` ones, each of which is
@@ -98,20 +99,20 @@ package object queries {
           strict.get(key).orElse(later.get(key).map(_()))
         def iterator: Iterator[(String, String)] =
           strict.iterator ++ later.iterator.map { case (k, v) => k -> v() }
+        override def keysIterator: Iterator[String] =
+          strict.keysIterator ++ later.keysIterator
       }
     }
     protected def t(dir: String, name: String): String = s"$dir/$name.parquet"
 
     /** Read a test table. `events.parquet` has carried an INT64
       * TIMESTAMP(NANOS) column that Spark 4 refuses by default
-      * (PARQUET_TYPE_ILLEGAL); nanosAsLong is a runtime SQLConf with no
-      * per-read option form, so set it here to stay robust however the
-      * session was built. Timestamp columns named `ts` are normalized
-      * to the epoch-nanos long domain (see [[normalizeEventTs]], which
-      * carries its own UTC cast — no session mutation). */
-    protected def rd(s: SparkSession, dir: String, name: String): DataFrame = {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      * (PARQUET_TYPE_ILLEGAL); the session `GraftSession` builds reads
+      * it as a long (nanosAsLong), and so do its `newSession()`
+      * children. Timestamp columns named `ts` are normalized to the
+      * epoch-nanos long domain (see [[normalizeEventTs]], which carries
+      * its own UTC cast — no session mutation). */
+    protected def rd(s: SparkSession, dir: String, name: String): DataFrame =
       normalizeEventTs(s.read.parquet(t(dir, name)))
-    }
   }
 }

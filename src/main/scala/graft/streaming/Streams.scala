@@ -47,27 +47,7 @@ object Streams {
   /** Windowed weighted aggregation over a file stream: one row per
     * (hour, event_type) with count and value sum. Complete-mode memory
     * sink; AvailableNow processes the backlog and stops. */
-  /** [[withStatePartitions]] + [[withNanosAsLong]] composed — the
-    * standard conf scope for a query-family streaming drive. */
-  def withDriveConfs[T](spark: SparkSession, n: Int)(body: => T): T =
-    withStatePartitions(spark, n)(withNanosAsLong(spark)(body))
-
-  /** Run `body` with the legacy parquet nanosAsLong conf ON, restoring
-    * the prior value after. Every driver here fully drains its query
-    * inside the call (AvailableNow + awaitTermination) and returns a
-    * materialized memory-sink table, so scoping the conf to the drive
-    * is safe — and the library stops mutating session state it does not
-    * own (matches n09's state-store-provider save/restore discipline).
-    * Not thread-safe (session-global conf); callers are the sequential
-    * Verify/Bench drivers. */
-  def withNanosAsLong[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.get(key, "false")
-    spark.conf.set(key, "true")
-    try body finally spark.conf.set(key, prev)
-  }
-
-  def windowedAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = withNanosAsLong(spark) {
+  def windowedAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // the file source needs a directory; glob-filter to the events table
     val stream = spark.readStream.schema(schema)
@@ -99,7 +79,7 @@ object Streams {
     * shape tumbling windows never exercise. Milli-long quantization
     * keeps the overlapping sums order-free; Complete-mode memory sink,
     * AvailableNow ≡ the batch explode-4-hops answer. */
-  def hoppingAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = withNanosAsLong(spark) {
+  def hoppingAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -120,7 +100,7 @@ object Streams {
   }
 
   def windowedAggWatermarked(spark: SparkSession, dir: String, delay: String,
-                             queryName: String): DataFrame = withNanosAsLong(spark) {
+                             queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -151,7 +131,7 @@ object Streams {
     * milli-scaled-long convention (a double fold is order-dependent
     * across engines). */
   def sessionWindowAgg(spark: SparkSession, dir: String, gap: String,
-                       queryName: String): DataFrame = withNanosAsLong(spark) {
+                       queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -180,7 +160,7 @@ object Streams {
   /** Update-mode aggregation: emits rows whose aggregate changed per
     * batch — the low-latency dashboard sink. One AvailableNow batch
     * touches every group once, so the emitted set is the batch answer. */
-  def updateModeAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = withNanosAsLong(spark) {
+  def updateModeAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -202,7 +182,7 @@ object Streams {
     * hash is remembered; with AvailableNow the emitted hash set is
     * exactly the batch DISTINCT (which row carried the first arrival is
     * batch-order-dependent, so callers project the key columns). */
-  def streamingDedup(spark: SparkSession, dir: String, queryName: String): DataFrame = withNanosAsLong(spark) {
+  def streamingDedup(spark: SparkSession, dir: String, queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -225,7 +205,7 @@ object Streams {
     * once the other side's watermark passes. AvailableNow emits exactly
     * the batch join result. */
   def streamStreamJoin(spark: SparkSession, dir: String, windowUs: Long,
-                       queryName: String): DataFrame = withNanosAsLong(spark) {
+                       queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     def src() = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -266,7 +246,7 @@ object Streams {
     * streaming behavior, and the oracle reproduces exactly that cutoff
     * rather than pretending the batch left join is the answer. */
   def streamStreamLeftOuter(spark: SparkSession, dir: String, windowUs: Long,
-                            delay: String, queryName: String): DataFrame = withNanosAsLong(spark) {
+                            delay: String, queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     def src() = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -304,7 +284,7 @@ object Streams {
     * per batch), which is why it is the preferred shape whenever the
     * right side is slowly-changing reference data. Broadcast by size. */
   def streamStaticJoin(spark: SparkSession, dir: String,
-                       queryName: String): DataFrame = withNanosAsLong(spark) {
+                       queryName: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -337,7 +317,7 @@ object Streams {
     * delivers each user's full history in one batch; an always-on
     * deployment would use EventTimeTimeout + watermark to emit/expire. */
   def sessionize(spark: SparkSession, dir: String, gapNs: Long,
-                 queryName: String): DataFrame = withNanosAsLong(spark) {
+                 queryName: String): DataFrame = {
     import spark.implicits._
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema)
@@ -423,7 +403,7 @@ object Streams {
     * update-mode memory sink — the LAST row per user is the converged
     * total (equal to the batch groupBy; asserted in StreamsSpec). */
   def runningTotals(spark: SparkSession, dir: String,
-                    queryName: String): DataFrame = withNanosAsLong(spark) {
+                    queryName: String): DataFrame = {
     import spark.implicits._
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema)

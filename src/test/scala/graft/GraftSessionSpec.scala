@@ -2,10 +2,15 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.plans.GraftFunctions
 
 /** Every main and the test suite build their session through
   * [[GraftSession]], so the tests run under the configuration users
-  * run, and the mains agree on how `SPARK_GRAFT_CPUS` is read. */
+  * run, and the mains agree on how `SPARK_GRAFT_CPUS` is read. The
+  * session carries graft's functions and rules from the start, so the
+  * query builders leave them as they are. */
 class GraftSessionSpec extends SparkSpec {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -42,6 +47,60 @@ class GraftSessionSpec extends SparkSpec {
 
   test("the test session resolves graft's functions from SQL text") {
     assert(spark.sql("SELECT delta_r(0.0D, 0.0D, 3.0D, 0.0D)").head().getDouble(0) == 3.0)
+  }
+
+  test("only GraftSession and plans/ put graft's functions, rules or confs into a session") {
+    val checks = Seq(
+      "calls GraftFunctions.register" -> """GraftFunctions\s*\.\s*register\b""".r,
+      "assigns experimental.extra*" -> """experimental\s*\.\s*extra\w+\s*(:\+|\+\+)?=(?!=)""".r,
+      "sets nanosAsLong" -> """legacy\.parquet\.nanosAsLong""".r)
+    val outside = scalaFiles("src/main").filterNot(p =>
+      p.getFileName.toString == "GraftSession.scala" || p.getParent.getFileName.toString == "plans")
+    for ((what, re) <- checks) {
+      val hits = outside.filter(p => re.findFirstIn(Files.readString(p)).isDefined)
+        .map(_.getFileName.toString).sorted
+      assert(hits.isEmpty, s"$what: $hits")
+    }
+  }
+
+  /** Each table function's registry entry in `s`, by name. */
+  private def entries(s: SparkSession): Map[String, ExpressionInfo] = {
+    val reg = s.sessionState.functionRegistry
+    GraftFunctions.table.map(f => f.name -> reg.lookupFunction(f.id).orNull).toMap
+  }
+
+  test("the test session and its children have every function of graft's table") {
+    for (s <- Seq(spark, spark.newSession()); f <- GraftFunctions.table) {
+      val info = entries(s)(f.name)
+      assert(info != null && info.getClassName == f.className, f.name)
+    }
+    assert(spark.newSession().sql("SELECT byte_values(CAST('AB' AS BINARY))").head()
+      .getSeq[Int](0) == Seq(65, 66))
+  }
+
+  test("query builders and attach leave the session's functions and rules as they were") {
+    val functions = entries(spark)
+    val strategies = spark.experimental.extraStrategies
+    val rules = spark.experimental.extraOptimizations
+    val confs = spark.conf.getAll
+    def unchanged(by: String): Unit = {
+      val now = entries(spark)
+      functions.foreach { case (name, info) =>
+        assert(now(name) eq info, s"$name was registered again by $by")
+      }
+      assert(spark.experimental.extraStrategies == strategies, s"strategies changed by $by")
+      assert(spark.experimental.extraOptimizations == rules, s"rules changed by $by")
+      assert(spark.conf.getAll == confs, s"confs changed by $by")
+    }
+    // one query from each family that used to register functions or add
+    // rules, j12, whose as-of join adds its strategy only to a plain
+    // session, and s01, which reads its table through `rd`
+    Seq("c01_native_histogram", "d02_jaccard_neardup", "m03_mlp_forward",
+      "j12_asof_native", "j14_range_join_rule", "j19_spatial_rule", "s01_stage1_pipeline")
+      .foreach(q => SparkEntry.queries(q)(spark, sf("sf0.001")))
+    unchanged("the query builders")
+    GraftSession.attach(spark)
+    unchanged("attach")
   }
 
   test("SPARK_GRAFT_CPUS: unset means every core, else a positive integer") {

@@ -37,8 +37,9 @@ class VerifySpec extends SparkSpec {
 /** A Verify run given a query list builds only those queries' oracles,
   * so on a machine without the reference fixtures a list of queries
   * that need none runs, while a list naming a fixture query stops with
-  * exit 2 naming the file. Runs Verify in a child JVM pointed at a
-  * missing reference root. */
+  * exit 2 naming the file, and so does a list naming a query that does
+  * not exist. Runs Verify in a child JVM pointed at a missing reference
+  * root. */
 class VerifyListSpec extends SparkSpec {
 
   private def verify(queries: String*): (Int, Path, String, String) = {
@@ -70,6 +71,13 @@ class VerifyListSpec extends SparkSpec {
     names.foreach(n => assert(Files.isDirectory(out.resolve(n)), s"no output for $n\n$err"))
     val oracles = new ObjectMapper().readTree(out.resolve("oracle_sql.json").toFile)
     assert(oracles.fieldNames.asScala.toSet == names.toSet, err)
+  }
+
+  test("a list naming an unknown query exits 2 naming it and writes nothing") {
+    val (rc, out, _, err) = verify("l01_binned_1d", "l01_binned_1dd")
+    assert(rc == 2, err)
+    assert(err.contains("graft.Verify: unknown query: l01_binned_1dd"), err)
+    assert(!Files.exists(out), "a run stopped by an unknown query wrote output")
   }
 
   test("a list naming a fixture query exits 2 naming the missing file") {

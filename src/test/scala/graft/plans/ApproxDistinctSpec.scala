@@ -16,14 +16,11 @@ class ApproxDistinctSpec extends SparkSpec {
     (1L to 50000L).map(i => (i % 5, i % 3000)).toDF("g", "v")
   }
 
+  /** Runs `body` with the rule's enable conf on or unset. The rule
+    * itself is the one GraftExtensions injected into the session. */
   private def withRule[T](enabled: Boolean)(body: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ ApproxDistinctRewrite
     if (enabled) spark.conf.set(ApproxDistinctRewrite.EnabledConf, "true")
-    try body finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.unset(ApproxDistinctRewrite.EnabledConf)
-    }
+    try body finally spark.conf.unset(ApproxDistinctRewrite.EnabledConf)
   }
 
   test("count(distinct) rewrites to the HLL aggregate and stays within 10%") {

@@ -204,7 +204,9 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("plans as AsOfJoinExec with hash exchanges on the keys, AQE on") {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "false")
+    // AQE is on by Spark's default, which an explicit "false" default
+    // here would read as off and then write back for every later suite
+    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try withThreshold("-1") {
       val l = leftDf((1L, 10L, 100L), (2L, 20L, 101L))
@@ -218,7 +220,8 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val planStr = plan.toString
       assert(planStr.contains("hashpartitioning(k"), s"left not hash-partitioned:\n$planStr")
       assert(planStr.contains("hashpartitioning(rk"), s"right not hash-partitioned:\n$planStr")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    } finally prev.fold(spark.conf.unset("spark.sql.adaptive.enabled"))(
+      spark.conf.set("spark.sql.adaptive.enabled", _))
   }
 
   test("AsOfJoinPruning pushes column pruning through the as-of node to the scans") {

@@ -11,7 +11,6 @@ import graft.SparkSpec
 class ByteValuesSpec extends SparkSpec {
 
   test("byte_values == hex substring+conv spelling on random strings") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(20260818L)
     val rows = (1 to 200).map { i =>

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 class HllRegistersSpec extends SparkSpec {
 
   private def hashed = {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     (1L to 20000L).map(i => (i % 7, (i * 2654435761L) % 2147483647L))
@@ -59,7 +58,6 @@ class HllRegistersSpec extends SparkSpec {
     // 7 groups x <=20 distinct values: every partial buffer is far below
     // m/4 occupancy, so ALL exchange traffic uses the sparse encoding;
     // the register vectors must still be partition-layout invariant
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val tiny = (1L to 140L).map(i => (i % 7, ((i % 20) * 2654435761L) % 2147483647L))

@@ -7,12 +7,8 @@ import graft.SparkSpec
   * partition-count-independent results (merge = union-and-trim). */
 class KmvMinimaSpec extends SparkSpec {
 
-  private lazy val registered: org.apache.spark.sql.SparkSession = {
-    GraftFunctions.register(spark); spark
-  }
-
   test("kmv_minima returns the k smallest distinct values, sorted") {
-    import registered.implicits._
+    import spark.implicits._
     val rnd = new scala.util.Random(7)
     val vals = Seq.fill(5000)(rnd.nextInt(100000).toLong)
     val expected = vals.distinct.sorted.take(64)
@@ -22,7 +18,7 @@ class KmvMinimaSpec extends SparkSpec {
   }
 
   test("result is identical across partition counts (mergeable sketch)") {
-    import registered.implicits._
+    import spark.implicits._
     val rnd = new scala.util.Random(11)
     val df = Seq.fill(3000)(rnd.nextInt(5000).toLong).toDF("v")
     val one = df.coalesce(1).selectExpr("kmv_minima(v, 32) AS m").collect()(0).getSeq[Long](0)
@@ -31,7 +27,7 @@ class KmvMinimaSpec extends SparkSpec {
   }
 
   test("fewer than k distinct values returns all of them; nulls skipped") {
-    import registered.implicits._
+    import spark.implicits._
     val df = Seq[Option[Long]](Some(5L), Some(3L), None, Some(5L), Some(9L))
       .toDF("v")
     val got = df.selectExpr("kmv_minima(v, 64) AS m").collect()(0).getSeq[Long](0)
@@ -39,7 +35,7 @@ class KmvMinimaSpec extends SparkSpec {
   }
 
   test("grouped sketch bounds per-group state at k") {
-    import registered.implicits._
+    import spark.implicits._
     val rnd = new scala.util.Random(13)
     val df = Seq.fill(2000)((rnd.nextInt(4), rnd.nextInt(10000).toLong))
       .toDF("g", "v")

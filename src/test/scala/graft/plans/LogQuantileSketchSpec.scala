@@ -5,14 +5,11 @@ import graft.SparkSpec
 
 class LogQuantileSketchSpec extends SparkSpec {
 
-  private def ensure(): Unit = GraftFunctions.register(spark)
-
   /** Deterministic pseudo-random positive values (LCG on the index). */
   private def values(n: Int): Seq[Long] =
     (0 until n).map(i => ((i * 6364136223846793005L + 1442695040888963407L) >>> 24) % 1000000 + 1)
 
   private def sketchOf(vals: Seq[Long], parts: Int): Map[Int, Long] = {
-    ensure()
     import spark.implicits._
     vals.toDF("v").repartition(parts)
       .agg(expr("qsketch_buckets(v)").as("m"))
@@ -37,7 +34,6 @@ class LogQuantileSketchSpec extends SparkSpec {
   }
 
   test("nulls and non-positive values are skipped") {
-    ensure()
     import spark.implicits._
     val df = Seq[Option[Long]](Some(5L), None, Some(-3L), Some(0L), Some(9L))
       .toDF("v")
@@ -73,7 +69,6 @@ class LogQuantileSketchSpec extends SparkSpec {
     // state store exactly as map-side partials merge in batch
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    GraftFunctions.register(s2)
     val dir = sf("sf0.001")
     val schema = s2.read.parquet(s"$dir/events.parquet").schema
     val agg = "qsketch_buckets(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))"

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class NativeEdgeCasesSpec extends SparkSpec {
 
   private def docs(texts: String*) = {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
@@ -28,7 +27,6 @@ class NativeEdgeCasesSpec extends SparkSpec {
 
   test("cdc_bounds matches the HOF spelling on real text") {
     val d = spark.read.parquet(sf("sf0.001") + "/documents.parquet").limit(50)
-    GraftFunctions.register(spark)
     val P = 2147483647L
     val horner = (0 until 8).map(k => s"ascii(substr(text, i - 7 + $k, 1))")
       .foldLeft("CAST(0 AS BIGINT)")((acc, ch) => s"($acc * 31 + $ch)")
@@ -43,7 +41,6 @@ class NativeEdgeCasesSpec extends SparkSpec {
   test("hll_registers: empty group yields all-zero registers") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val r = Seq((1L, 42L)).toDF("g", "hv")
       .filter(col("g") === 999L) // empty
       .agg(expr("hll_registers(hv, 4)").as("regs"))
@@ -52,7 +49,6 @@ class NativeEdgeCasesSpec extends SparkSpec {
   }
 
   test("hll_estimate: all-zero registers estimate zero (linear counting)") {
-    GraftFunctions.register(spark)
     // V = m zeros -> m·ln(m/m) = 0: an empty sketch reads as 0 distinct
     val r = spark.sql(
       "SELECT hll_estimate(array_repeat(0, 512)) AS est").collect()(0)
@@ -60,7 +56,6 @@ class NativeEdgeCasesSpec extends SparkSpec {
   }
 
   test("hll_estimate agrees with the SQL estimator fold on real registers") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val df = (1L to 5000L).map(i => (i % 3, (i * 2654435761L) % 2147483647L))

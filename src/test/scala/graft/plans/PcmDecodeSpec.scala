@@ -21,7 +21,6 @@ class PcmDecodeSpec extends SparkSpec {
   }
 
   private def df = {
-    graft.plans.GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     Seq(

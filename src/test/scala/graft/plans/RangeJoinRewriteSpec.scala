@@ -28,15 +28,13 @@ class RangeJoinRewriteSpec extends SparkSpec {
     intervals.join(points, col("lo") <= col("x") && col("x") < col("hi"))
       .select(col("iv_id"), col("pt_id"))
 
+  /** Runs `body` with the width conf set to `width`, or unset. The
+    * rule itself is the one GraftExtensions injected into the session,
+    * as in j14. */
   private def withRule[T](width: Option[Long])(body: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RangeJoinRewrite
     width.foreach(w =>
       spark.conf.set(RangeJoinRewrite.WidthConf, w.toString))
-    try body finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.unset(RangeJoinRewrite.WidthConf)
-    }
+    try body finally spark.conf.unset(RangeJoinRewrite.WidthConf)
   }
 
   test("without the width conf the theta join stays nested-loop") {

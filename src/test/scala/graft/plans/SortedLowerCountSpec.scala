@@ -59,7 +59,6 @@ class SortedLowerCountSpec extends SparkSpec {
   }
 
   test("SQL surface: sorted_lower_count(x, array) matches the HOF") {
-    graft.plans.GraftFunctions.register(spark)
     val arr = lows.mkString("array(", ", ", ")")
     val df = spark.range(1).selectExpr(
       s"sorted_lower_count(0.5D, $arr) AS a",
@@ -72,7 +71,6 @@ class SortedLowerCountSpec extends SparkSpec {
   }
 
   test("a NULL lows array is rejected with a clear error, not an NPE") {
-    graft.plans.GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.range(1).selectExpr(
         "sorted_lower_count(0.5D, CAST(NULL AS ARRAY<DOUBLE>)) AS a").collect()

@@ -22,7 +22,6 @@ class SpatialJoinRewriteSpec extends SparkSpec {
   }
 
   private def naiveJoin: DataFrame = {
-    GraftFunctions.register(spark)
     val a = pts.select(col("id").as("a_id"), col("x").as("ax"), col("y").as("ay"))
     val b = pts.select(col("id").as("b_id"), col("x").as("bx"), col("y").as("by"))
     a.join(b, expr("within_radius(ax, ay, bx, by, 1.5D)") &&
@@ -30,15 +29,11 @@ class SpatialJoinRewriteSpec extends SparkSpec {
       .select(col("a_id"), col("b_id"))
   }
 
+  /** Runs `body` with the rule's enable conf on. The rule itself is the
+    * one GraftExtensions injected into the session, as in j19. */
   private def withRule[T](body: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    if (!prev.contains(SpatialJoinRewrite))
-      spark.experimental.extraOptimizations = prev :+ SpatialJoinRewrite
     spark.conf.set(SpatialJoinRewrite.EnabledConf, "true")
-    try body finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.unset(SpatialJoinRewrite.EnabledConf)
-    }
+    try body finally spark.conf.unset(SpatialJoinRewrite.EnabledConf)
   }
 
   test("rule off: nested loop; rule on: cell equi-join with Generate") {
@@ -67,7 +62,6 @@ class SpatialJoinRewriteSpec extends SparkSpec {
   }
 
   test("rule leaves joins with an existing equi-key alone") {
-    GraftFunctions.register(spark)
     val a = pts.select(col("id").as("a_id"), col("x").as("ax"),
       col("y").as("ay"), (col("id") % 7).as("ka"))
     val b = pts.select(col("id").as("b_id"), col("x").as("bx"),
@@ -82,7 +76,6 @@ class SpatialJoinRewriteSpec extends SparkSpec {
   }
 
   test("within_radius evaluates the exact arithmetic incl. nulls") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq(
@@ -107,7 +100,6 @@ class SpatialJoinRewriteSpec extends SparkSpec {
     // same expression through a plain projection (whole-stage codegen)
     // and through a FILTER (which forces the predicate through both
     // paths during constant-folding + execution): both must be NULL/no-row.
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq((0.0, 0.0, 0.1, 0.1)).toDF("ax", "ay", "bx", "by")

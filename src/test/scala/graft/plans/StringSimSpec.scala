@@ -45,7 +45,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("expression evaluates through SQL and codegen") {
-    graft.plans.GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val df = duckVectors.map { case (a, b, w) => (a, b, w) }.toDF("a", "b", "want")

@@ -12,10 +12,7 @@ class TopKPairsSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def registered() = { GraftFunctions.register(spark); spark }
-
   test("topk_max matches the row_number window form on distinct pairs") {
-    registered()
     val df = Seq(
       (1L, 50L, 101L), (1L, 70L, 102L), (1L, 70L, 103L), (1L, 10L, 104L),
       (2L, 5L, 201L), (2L, 5L, 202L),
@@ -35,7 +32,6 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("topk_max is partition-invariant and survives shuffled merges") {
-    registered()
     val base = spark.range(0, 5000)
       .select(($"id" % 7).as("g"), (($"id" * 131) % 1000).as("v"), $"id")
     val expected = base.repartition(1)
@@ -52,7 +48,6 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("topk_max dedups identical pairs and ignores nulls") {
-    registered()
     val df = Seq(
       (1L, Some(10L), Some(1L)), (1L, Some(10L), Some(1L)),
       (1L, None, Some(2L)), (1L, Some(3L), None)

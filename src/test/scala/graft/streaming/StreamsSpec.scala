@@ -111,7 +111,6 @@ class StreamsSpec extends SparkSpec {
     // partials merge into the state store by the element-wise max
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.plans.GraftFunctions.register(s2)
     val dir = sf("sf0.001")
     val schema = s2.read.parquet(s"$dir/events.parquet").schema
     val hashExpr = "((user_id * 1024 + ((CAST(floor(value * 10) AS BIGINT) % 1024 " +
@@ -128,7 +127,6 @@ class StreamsSpec extends SparkSpec {
       q.awaitTermination()
       s2.table("spec_hll_stream").orderBy("event_type").collect()
     }
-    graft.plans.GraftFunctions.register(spark)
     val want = graft.queries.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
       .groupBy(col("event_type"))
       .agg(expr(s"hll_registers($hashExpr, 9)").as("regs"))
