@@ -42,10 +42,8 @@ object Bench {
     // measure GC thrash instead (observed: calib_after 14.5 s vs
     // calib_before 3.99 on a quiet host after a warm-solo g15 at GenSf
     // sf1z / 8 GiB — a 3.6x artifact that poisons normalization). Two
-    // probes per run, so the gc cost is noise. (Skipped under the
-    // SPARK_GRAFT_WARM_NOGC validation knob so the no-hints A/B is
-    // airtight.)
-    if (!sys.env.get("SPARK_GRAFT_WARM_NOGC").contains("1")) System.gc()
+    // probes per run, so the gc cost is noise.
+    System.gc()
     var sink = calibRep(-1L) // JIT warm, unmeasured
     val t0 = System.nanoTime()
     var r = 0
@@ -134,12 +132,6 @@ object Bench {
     // vary 2-3x on identical work (measured: d07 7-23 s, zero spill,
     // same shuffle bytes). The driver never sets this.
     val warmRuns = sys.env.get("SPARK_GRAFT_WARM").contains("1")
-    // dev-only A/B knob: skip the warm-path System.gc() hints so the
-    // DETERMINISTIC reclaim can be validated alone (the round-13 ask:
-    // the big-SF warm regime must be green on a JVM that never honors
-    // the hint). Timing runs keep the hints — GC debt is ~40 % of a
-    // heavy measured pass (PLANS round-14).
-    val warmNoGc = sys.env.get("SPARK_GRAFT_WARM_NOGC").contains("1")
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -171,16 +163,15 @@ object Bench {
           org.apache.spark.sql.classic.GraftBridge
             .currentBroadcastId(spark.sparkContext))
         // ...and compact before measuring. With checkpoint blocks AND
-        // broadcasts reclaimed synchronously above, the warm regime is
-        // green at GenSf sf3 / 8 GiB with every hint skipped
-        // (SPARK_GRAFT_WARM_NOGC=1: g06 raw 324.5 s, zero OOM) — the
-        // round-13 OOM class needed the RDD unpersist, and the round-14
-        // repro without broadcast reclaim showed the task-binary torrent
-        // blocks were the remaining heap residue (OOM in the wedge
-        // stage; ~40 % GC drag at sf1z). The hint now buys only ~4 %
-        // (311.3 vs 324.5 raw at sf3): kept as a measurement aid,
-        // between passes, outside every timed window.
-        if (!warmNoGc) System.gc()
+        // broadcasts reclaimed synchronously above, the warm regime was
+        // green at GenSf sf3 / 8 GiB with every gc hint skipped (g06 raw
+        // 324.5 s, zero OOM) — the round-13 OOM class needed the RDD
+        // unpersist, and the round-14 repro without broadcast reclaim
+        // showed the task-binary torrent blocks were the remaining heap
+        // residue (OOM in the wedge stage; ~40 % GC drag at sf1z). The
+        // hint buys only ~4 % (311.3 vs 324.5 raw at sf3): kept as a
+        // measurement aid, between passes, outside every timed window.
+        System.gc()
       }
       val beforeMeasured =
         if (warmRuns) spark.sparkContext.getPersistentRDDs.keySet

@@ -14,8 +14,8 @@ import graft.plans.{GraftExtensions, GraftFunctions}
   * oracles and the tests check results under the configuration users
   * run. The session carries graft's state from the start, and so do its
   * `newSession()` children: [[GraftExtensions]] injects every function
-  * of `GraftFunctions.table`, the as-of join strategy and graft's
-  * optimizer rules. The query builders assume such a session: they
+  * of `GraftFunctions.table`, the as-of join strategy and its pruning
+  * rule. The query builders assume such a session: they
   * register no function, add no rule and set none of the confs below.
   * It sets only what differs from Spark's defaults:
   *  - shuffle partitions sized to cores, not Spark's 200 default —

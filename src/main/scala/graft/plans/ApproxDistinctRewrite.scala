@@ -1,47 +1,43 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types.LongType
 
 /** Opt-in approximate-query-processing rewrite (the "APPROX mode" of
-  * warehouse engines, as an optimizer rule): when
-  * `spark.graft.approxDistinct = true`, every single-column exact
-  * `COUNT(DISTINCT x)` is rewritten to the HLL estimate
+  * warehouse engines, as a plan rewrite): [[on]] rewrites every
+  * single-column exact `COUNT(DISTINCT x)` in a DataFrame's plan to the
+  * HLL estimate
   *
   *   count(distinct x)  ⇒  cast(round(hll_estimate(
-  *                            hll_registers(pmod(hash(x), 2³¹), p))) as long)
+  *                            hll_registers(pmod(hash(x), 2³¹), 12))) as long)
   *
   * Why this matters at 100 TB: exact distinct keeps UNBOUNDED per-group
   * state (Spark plans it as an Expand + a second exact aggregation over
   * every distinct value — the distinct values themselves cross the
-  * wire), while the rewritten aggregate ships one 2^p-byte register
-  * vector per group with map-side combine. The user opts in per
-  * session/query because the semantics genuinely change (±~1.04/√2^p
-  * relative error; p via `spark.graft.approxDistinct.p`, default 12 ⇒
-  * ~1.6%).
+  * wire), while the rewritten aggregate ships one 2^12-byte register
+  * vector per group with map-side combine. The user opts in per query
+  * because the semantics genuinely change (±~1.04/√2^12 ≈ 1.6%
+  * relative error).
   *
   * Scope guards: only `Count(child)` with isDistinct, one
   * deterministic child, no FILTER clause rewritten away (the filter is
   * preserved on the new AggregateExpression); multi-column distinct
-  * counts and count(*) are left exact. Fixpoint safe: the rewritten
-  * aggregate has isDistinct = false, so the rule cannot re-fire.
+  * counts and count(*) are left exact. The rewritten aggregate has
+  * isDistinct = false, so rewriting its output again changes nothing.
   */
-object ApproxDistinctRewrite extends Rule[LogicalPlan] {
+object ApproxDistinctRewrite {
 
-  val EnabledConf = "spark.graft.approxDistinct"
-  val PConf = "spark.graft.approxDistinct.p"
+  /** HLL precision: 2^P registers per group. */
+  private val P = 12
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(EnabledConf, "false").equalsIgnoreCase("true")) {
-      return plan
-    }
-    val p = try {
-      conf.getConfString(PConf, "12").toInt.max(4).min(16)
-    } catch { case _: NumberFormatException => 12 }
-    plan.transformUp {
+  /** `df` with its single-column distinct counts estimated from 2^P
+    * HLL registers. */
+  def on(df: DataFrame): DataFrame =
+    GraftBridge.ofRows(df.sparkSession, GraftBridge.analyzed(df).transformUp {
       case agg: Aggregate =>
         val rewritten = agg.aggregateExpressions.map { ne =>
           ne.transform {
@@ -57,12 +53,11 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
                 Pmod(Cast(new Murmur3Hash(Seq(child)), LongType),
                   Literal(2147483648L)))
               val regs = ae.copy(
-                aggregateFunction = HllRegisters(hashed, p),
+                aggregateFunction = HllRegisters(hashed, P),
                 isDistinct = false)
               Cast(Round(HllEstimate(regs), Literal(0)), LongType)
           }.asInstanceOf[NamedExpression]
         }
         agg.copy(aggregateExpressions = rewritten)
-    }
-  }
+    })
 }

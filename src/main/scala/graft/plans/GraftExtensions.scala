@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /** SparkSessionExtensions that put graft into every session they
   * build: all of [[GraftFunctions.table]]'s functions, usable from SQL
-  * text, the as-of join strategy and graft's optimizer rules.
+  * text, the as-of join strategy and its column-pruning rule.
   *
   *   spark.builder.withExtensions(new GraftExtensions)
   *   // or: --conf spark.sql.extensions=graft.plans.GraftExtensions
@@ -15,6 +15,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   * A child of such a session (`spark.newSession()`) carries the same
   * extensions. For a session built without them use
   * `GraftSession.attach(spark)`, which adds the functions.
+  *
+  * graft's optional rewrites are not session state: a query opts in
+  * per DataFrame with `RangeJoinRewrite.on`, `SpatialJoinRewrite.on`
+  * or `ApproxDistinctRewrite.on`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -23,12 +27,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // custom optimizer rule: column pruning through the as-of node
     ext.injectOptimizerRule(_ => AsOfJoinPruning)
-    // custom optimizer rule: bucketed range-join rewrite (gated on
-    // spark.graft.rangeJoin.bucketWidth — inactive unless set)
-    ext.injectOptimizerRule(_ => RangeJoinRewrite)
-    ext.injectOptimizerRule(_ => SpatialJoinRewrite)
-    // custom optimizer rule: exact COUNT(DISTINCT) -> HLL estimate
-    // (gated on spark.graft.approxDistinct — inactive unless true)
-    ext.injectOptimizerRule(_ => ApproxDistinctRewrite)
   }
 }

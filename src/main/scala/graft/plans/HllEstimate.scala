@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * linear-counting correction m·ln(m/V) when E ≤ 2.5m and V > 0
   * (Flajolet et al. 2007). Scalar companion to the aggregate so
   * estimates compose anywhere an expression can (including the
-  * [[ApproxDistinctRewrite]] optimizer rule's rewritten plans).
+  * [[ApproxDistinctRewrite]]'s rewritten plans).
   * CodegenFallback: evaluated once per GROUP (never per input row), so
   * interpretation cost is irrelevant and fallback keeps the fold out
   * of generated-code size budgets. */

@@ -1,22 +1,22 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types.LongType
 
-/** Automatic range-join rewrite (SURVEY §2.7 path: custom
-  * `Rule[LogicalPlan]` that changes the JOIN ALGORITHM, not just the
-  * plan shape).
+/** Range-join rewrite (SURVEY §2.7 path: a plan rewrite that changes
+  * the JOIN ALGORITHM, not just the plan shape).
   *
   * An inner join whose only cross-side predicates are
   * `lo <= x AND x < hi` has no equi-key, so Spark plans a nested-loop
   * join — O(|L|·|R|) comparisons even when one side broadcasts. The
   * repo's j11/j13 show the manual fix: explode each interval into the
   * fixed-width buckets it spans and equi-join on the bucket with the
-  * range predicate as a residual. This rule performs that rewrite
-  * AUTOMATICALLY:
+  * range predicate as a residual. [[on]] performs that rewrite on a
+  * DataFrame's plan:
   *
   *   Join(L, R, lo <= x && x < hi)
   *     ⇒ Project(origOutput,
@@ -27,31 +27,36 @@ import org.apache.spark.sql.types.LongType
   * (div = floor division, exact on longs). The residual keeps the
   * rewrite LOSSLESS for any bucket width; the width only tunes the
   * explode factor versus bucket selectivity — exactly the contract of
-  * a range-join "bin size" hint. Gated on the session conf
-  * `spark.graft.rangeJoin.bucketWidth` (positive long; unset = rule
-  * inactive), because a good width is data knowledge the user has and
-  * the optimizer does not: it should be ≥ the typical interval length
-  * (each interval then explodes into ≤ 2 buckets).
+  * a range-join "bin size" hint. The caller passes the width with the
+  * DataFrame that wants the rewrite, because a good width is data
+  * knowledge the user has and the optimizer does not: it should be ≥
+  * the typical interval length (each interval then explodes into ≤ 2
+  * buckets). The rewritten plan belongs to the returned DataFrame, so
+  * it holds whenever and on whichever thread that DataFrame runs.
   *
   * Scope guards: inner joins; all range endpoints LongType and
   * deterministic; bounds both from one side, probe from the other; no
   * existing cross-side equality conjunct (those already hash-join).
-  * Fixpoint safe: the rewritten join HAS an equality conjunct, so the
-  * rule cannot re-fire on its own output.
+  * The rewritten join HAS an equality conjunct, so rewriting its
+  * output again changes nothing. [[on]] sees the plan as analyzed,
+  * before predicate pushdown, so the range must be the join's own
+  * condition: one written as a `.where` above the join, or as a SQL
+  * comma join, is left as written.
   */
-object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object RangeJoinRewrite extends PredicateHelper {
 
-  val WidthConf = "spark.graft.rangeJoin.bucketWidth"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val width = try {
-      conf.getConfString(WidthConf, "").toLong
-    } catch { case _: NumberFormatException => -1L }
-    if (width <= 0) return plan
-    plan.transformDown {
+  /** `df` with every range theta join in its plan bucketed at `width`;
+    * only range conjuncts in a join's own condition are seen. Throws
+    * IllegalArgumentException naming `width` unless it is positive. */
+  def on(df: DataFrame, width: Long): DataFrame = {
+    if (width <= 0) throw new IllegalArgumentException(
+      s"range-join bucket width must be positive, got $width")
+    val spark = df.sparkSession
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    GraftBridge.ofRows(spark, GraftBridge.analyzed(df).transformDown {
       case j @ Join(left, right, Inner, Some(cond), _) =>
-        rewrite(j, left, right, cond, width).getOrElse(j)
-    }
+        rewrite(j, left, right, cond, width, tz).getOrElse(j)
+    })
   }
 
   /** exprs fully resolved from `side` (and non-empty references). */
@@ -65,7 +70,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
-                      cond: Expression, width: Long): Option[LogicalPlan] = {
+                      cond: Expression, width: Long, tz: String): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
     def crossSide(e: Expression): Boolean =
       e.references.intersect(left.outputSet).nonEmpty &&
@@ -107,11 +112,11 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
     val bucketAttr =
       AttributeReference("_graft_range_bucket", LongType, nullable = false)()
-    // Sequence is TimeZoneAwareExpression: without a zone id it stays
-    // UNRESOLVED and the optimizer's plan-change validator rejects the
-    // rewrite (integer sequences never use it, but resolved requires it)
+    // Sequence is TimeZoneAwareExpression: without a zone id it is
+    // unresolved, so the session's zone is set here and the rewritten
+    // plan stays resolved (integer sequences never use it)
     val gen = Explode(Sequence(floorDiv(lo, width), floorDiv(hi, width),
-      None, Some(conf.sessionLocalTimeZone)))
+      None, Some(tz)))
     val probeAlias = Alias(floorDiv(x, width), "_graft_range_probe")()
     val (newLeft, newRight) =
       if (boundsOnLeft)

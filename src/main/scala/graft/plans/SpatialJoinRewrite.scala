@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -7,12 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType}
 
 /** `within_radius(ax, ay, bx, by, r)` — the planar radius predicate
-  * `(ax−bx)² + (ay−by)² ≤ r²`, exposed as a named expression so the
-  * optimizer can RECOGNIZE a spatial join and change its algorithm
+  * `(ax−bx)² + (ay−by)² ≤ r²`, exposed as a named expression so a
+  * plan rewrite can RECOGNIZE a spatial join and change its algorithm
   * (the Sedona/PostGIS convention: spatial predicates are functions the
   * planner pattern-matches, because a raw arithmetic tree is too
   * brittle to match reliably). Evaluates exactly the naive arithmetic —
@@ -78,9 +79,9 @@ case class WithinRadius(ax: Expression, ay: Expression,
   override def prettyName: String = "within_radius"
 }
 
-/** Automatic 2-D radius-join rewrite — the planar generalization of
-  * [[RangeJoinRewrite]] and the rule form of the manual grid trick the
-  * repo uses in j17 (haversine) and d22 (DBSCAN):
+/** 2-D radius-join rewrite — the planar generalization of
+  * [[RangeJoinRewrite]] and the plan-rewrite form of the manual grid
+  * trick the repo uses in j17 (haversine) and d22 (DBSCAN):
   *
   *   Join(L, R, within_radius(ax, ay, bx, by, r) && rest)
   *     ⇒ Project(origOutput,
@@ -96,24 +97,26 @@ case class WithinRadius(ax: Expression, ay: Expression,
   * the rewrite Spark has no equi-key and plans a nested-loop join:
   * O(|L|·|R|) distance evaluations; with it, candidates are cell-local.
   *
-  * Gated on `spark.graft.spatialJoin.enabled` (the rule changes the
-  * explode factor 9× on one side — a trade the user opts into, matching
-  * RangeJoinRewrite's conf-gate convention). Scope: inner joins, a
-  * `within_radius` conjunct with sides split across the join, positive
-  * literal radius, no existing cross-side equality (those already hash
-  * join; also makes the rule fixpoint-safe on its own output).
+  * Opt-in per DataFrame through [[on]] (the rewrite multiplies one
+  * side's rows by 9 — a trade the caller chooses for the join that
+  * wants it, as with RangeJoinRewrite's width). Scope: inner joins, a
+  * `within_radius` conjunct with sides split across the join, a
+  * foldable radius that evaluates positive, no existing cross-side
+  * equality (those already hash join; also leaves the rewrite's own
+  * output unchanged). [[on]] sees the plan as analyzed, before
+  * predicate pushdown, so the predicate must be the join's own
+  * condition: one written as a `.where` above the join, or as a SQL
+  * comma join, is left as written.
   */
-object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object SpatialJoinRewrite extends PredicateHelper {
 
-  val EnabledConf = "spark.graft.spatialJoin.enabled"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString(EnabledConf, "false") != "true") return plan
-    plan.transformDown {
+  /** `df` with every radius theta join in its plan cell-keyed; only
+    * a `within_radius` in a join's own condition is seen. */
+  def on(df: DataFrame): DataFrame =
+    GraftBridge.ofRows(df.sparkSession, GraftBridge.analyzed(df).transformDown {
       case j @ Join(left, right, Inner, Some(cond), _) =>
         rewrite(j, left, right, cond).getOrElse(j)
-    }
-  }
+    })
 
   private def from(e: Expression, side: LogicalPlan): Boolean =
     e.references.nonEmpty && e.references.subsetOf(side.outputSet) &&
@@ -140,20 +143,19 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     if (hasEqui) return None
 
     // a within_radius conjunct whose (ax,ay) resolve from one side and
-    // (bx,by) from the other, radius a positive literal
-    val hit = conjuncts.collectFirst {
-      case wr @ WithinRadius(ax, ay, bx, by, rl) if {
-        val rv = rl match {
-          case Literal(d: Double, DoubleType) => d
-          case _ => -1.0
-        }
-        rv > 0.0 &&
-          ((from(ax, left) && from(ay, left) && from(bx, right) && from(by, right)) ||
-            (from(ax, right) && from(ay, right) && from(bx, left) && from(by, left)))
-      } => wr
-    }
-    val wr = hit.getOrElse(return None)
-    val r = wr.r.asInstanceOf[Literal].value.asInstanceOf[Double]
+    // (bx,by) from the other, radius foldable to a positive double
+    def split(wr: WithinRadius): Boolean =
+      (from(wr.ax, left) && from(wr.ay, left) && from(wr.bx, right) && from(wr.by, right)) ||
+        (from(wr.ax, right) && from(wr.ay, right) && from(wr.bx, left) && from(wr.by, left))
+    def radius(rl: Expression): Option[Double] =
+      if (!rl.foldable) None
+      else rl.eval() match {
+        case d: Double if d > 0.0 => Some(d)
+        case _ => None
+      }
+    val (wr, r) = conjuncts.iterator.collect {
+      case wr: WithinRadius if split(wr) => radius(wr.r).map(wr -> _)
+    }.flatten.nextOption().getOrElse(return None)
     val leftHasA = from(wr.ax, left)
     val (lx, ly) = if (leftHasA) (wr.ax, wr.ay) else (wr.bx, wr.by)
     val (rx, ry) = if (leftHasA) (wr.bx, wr.by) else (wr.ax, wr.ay)

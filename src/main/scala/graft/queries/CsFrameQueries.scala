@@ -154,7 +154,6 @@ object CsFrameQueries extends QueryFamily {
 
   // ---- identical layers as chained CTEs, DuckDB side ---------------------
   private val p14Sql = {
-    def sinhS(x: String) = s"((EXP($x) - EXP(-($x))) / 2.0)"
     s"""WITH base AS (
        | SELECT event_id,
        |  value + 1.0 AS pt1,

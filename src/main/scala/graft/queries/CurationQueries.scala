@@ -527,8 +527,6 @@ object CurationQueries extends QueryFamily {
       prevFp = fp
       fp = fingerprint(edges)
       iters += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(s"[d12] iter=$iters edges=${fp._1} hash=${fp._2}")
     }
     if (fp._1 <= driverThreshold && fp != prevFp) {
       // finish on the driver: min-rooted union-find with path compression

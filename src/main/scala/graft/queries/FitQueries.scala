@@ -613,23 +613,9 @@ object FitQueries extends QueryFamily {
   // rank ties break on candidate id. The shape formula is ONE shared
   // SQL text (E-notation literals — plain decimals parse DECIMAL in
   // both engines and decimal division truncates).
-  // Dev-only probe knob (SPARK_GRAFT_F07_FINE=1, never set by the
-  // driver): widens the scan to 10× the candidates (5×25×10 = 1250) to
-  // demonstrate the scale contract — the corpus cost is ONE scan into a
-  // 40-bin histogram regardless of grid width; only the data-
-  // independent (candidate × bin) shape table grows. Expect flat wall
-  // time (measured round 11, PLANS.md). The registered oracle always
-  // uses the default 5×5×5 grid — the fine grid exists only for the
-  // A/B timing probe.
-  private val f07Fine = sys.env.get("SPARK_GRAFT_F07_FINE").contains("1")
-  private def gridSteps(lo: Double, hi: Double, n: Int): Seq[Double] =
-    (0 until n).map(i => lo + (hi - lo) * i / (n - 1).toDouble)
   private val f07A1 = Seq(0.7, 1.05, 1.39, 1.75, 2.1)
-  private val f07A2 =
-    if (f07Fine) gridSteps(0.30, 0.62, 25) else Seq(0.30, 0.38, 0.46, 0.54, 0.62)
-  private val f07A3 =
-    if (f07Fine) gridSteps(-0.40, -0.12, 10)
-    else Seq(-0.40, -0.33, -0.26, -0.19, -0.12)
+  private val f07A2 = Seq(0.30, 0.38, 0.46, 0.54, 0.62)
+  private val f07A3 = Seq(-0.40, -0.33, -0.26, -0.19, -0.12)
   private val f07Shape =
     "(exp(a2 * (xc / 100.0E0) + a3 * (xc / 100.0E0) * (xc / 100.0E0)) * 2.5E0" +
       " / (power(xc - 91.2E0, a1) + power(1.25E0, a1)))"

@@ -48,6 +48,10 @@ object MLQueries extends QueryFamily {
     s"((EXP(LEAST(GREATEST($x, -20.0), 20.0) * 2.0) - 1.0) / " +
       s"(EXP(LEAST(GREATEST($x, -20.0), 20.0) * 2.0) + 1.0))"
 
+  /** A weight as SQL text with six decimals, spelled the same on both
+    * engines. */
+  private def lit6(x: Double) = "%.6f".formatLocal(java.util.Locale.ROOT, x)
+
   /** Sum with chunk-of-16 parenthesization, IDENTICAL on both engines:
     * a flat 128-term left fold exceeds DuckDB's 128 binder-recursion
     * cap, and the fold shape fixes the float summation order, so both
@@ -157,7 +161,6 @@ object MLQueries extends QueryFamily {
     // the SAME chunk-16 fold shape as the oracle SQL (chunkSumS) and
     // adds the bias last, so results are bit-identical to the spelled-
     // out form; weights pass through "%.6f" text on both engines.
-    def lit6(x: Double) = "%.6f".formatLocal(java.util.Locale.ROOT, x)
     def arrLit(xs: Seq[Double]) = xs.map(lit6).mkString("array(", ", ", ")")
     val feats = ev.select((col("event_id") +: rawFeatures): _*)
     val std = feats.select(col("event_id"),
@@ -179,7 +182,6 @@ object MLQueries extends QueryFamily {
       .orderBy(col("event_id"))
   }
   private val m03Sql = {
-    def lit6(x: Double) = "%.6f".formatLocal(java.util.Locale.ROOT, x)
     val std = (0 until nIn).map(i => s"((f$i - ${mu(i)}) / ${sig(i)}) AS h0_$i").mkString(", ")
     val layers = (0 until mlpDims.size - 1).map { l =>
       val w = mlpW(l); val b = mlpB(l)
@@ -2563,7 +2565,6 @@ object MLQueries extends QueryFamily {
     vbfScoreFor(h0, 0)
   private[queries] def vbfScoreFor(h0: org.apache.spark.sql.Column,
       fold: Int): org.apache.spark.sql.Column = {
-    def lit6(x: Double) = "%.6f".formatLocal(java.util.Locale.ROOT, x)
     def wlit(xs: Seq[Double]) = typedLit(xs.map(x => lit6(x).toDouble))
     val hLast = (0 until vbfDims.size - 1).foldLeft(h0) { (cur, l) =>
       call_function("mlp_dense", cur, wlit(vbfW(l, fold).flatten.toSeq),
@@ -2597,7 +2598,6 @@ object MLQueries extends QueryFamily {
     * Shared by m35's oracle and n14's streaming batch oracle. */
   private[queries] def vbfScoreSqlParts(fromClause: String,
       extraCols: String = "", fold: Int = 0): (String, String) = {
-    def lit6(x: Double) = "%.6f".formatLocal(java.util.Locale.ROOT, x)
     def d(x: Double) = s"CAST('$x' AS DOUBLE)" // exact round-trip, no DECIMAL inference
     val keep = if (extraCols.isEmpty) "event_id" else s"event_id, $extraCols"
     val std = (0 until vbfDims.head).map { i =>

@@ -712,14 +712,14 @@ object MiscQueries extends QueryFamily {
   }
 
   // ---- j19: automatic spatial-join rewrite --------------------------------
-  // d22's grid trick as an OPTIMIZER RULE instead of hand-written plan
+  // d22's grid trick as a PLAN REWRITE instead of hand-written plan
   // shape: the query below is the NAIVE radius self-join — a single
   // `within_radius` theta predicate, no manual bucketing — and
-  // plans.SpatialJoinRewrite turns it into the 9-cell explode +
+  // plans.SpatialJoinRewrite.on turns it into the 9-cell explode +
   // equi-join with the original predicate as residual (j14's contract:
   // the oracle is the identical naive SQL, so a green hash + the
-  // SpatialJoinRewriteSpec plan assertions prove the rule lossless AND
-  // firing). Same hash-scattered point cloud as d22, smaller slice.
+  // SpatialJoinRewriteSpec plan assertions prove the rewrite lossless
+  // AND firing). Same hash-scattered point cloud as d22, smaller slice.
   private val spatialR = 1.5
   private def j19(s: SparkSession, dir: String): DataFrame = {
     val pts = rd(s, dir, "events")
@@ -729,19 +729,11 @@ object MiscQueries extends QueryFamily {
         expr(s"CAST((((event_id * 31 + 7) * 2654435761) % ${2147483647L}) % 1000 AS DOUBLE) / 10.0").as("y"))
     val a = pts.select(col("id").as("a_id"), col("x").as("ax"), col("y").as("ay"))
     val b = pts.select(col("id").as("b_id"), col("x").as("bx"), col("y").as("by"))
-    val key = graft.plans.SpatialJoinRewrite.EnabledConf
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
-      a.join(b, expr(s"within_radius(ax, ay, bx, by, ${spatialR}D)") &&
-          col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"))
-        .orderBy(col("a_id"), col("b_id"))
-        .localCheckpoint() // execute while the rewrite is active
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    graft.plans.SpatialJoinRewrite.on(
+        a.join(b, expr(s"within_radius(ax, ay, bx, by, ${spatialR}D)") &&
+          col("a_id") < col("b_id")))
+      .select(col("a_id"), col("b_id"))
+      .orderBy(col("a_id"), col("b_id"))
   }
   private val j19Sql =
     s"""WITH pts AS (

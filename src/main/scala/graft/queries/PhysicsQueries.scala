@@ -32,8 +32,8 @@ object PhysicsQueries extends QueryFamily {
       | (user_id % 63) / 10.0 - 3.1 AS phi2""".stripMargin
   private val muMass = 0.1057
 
-  // SQL mirrors of Kinematics' portable forms (same expression tree).
-  private def sinhS(x: String) = s"((EXP($x) - EXP(-($x))) / 2.0)"
+  // SQL mirrors of Kinematics' portable forms (same expression tree);
+  // sinhS and pzS are the package's.
   private def asinhS(x: String) = s"LN(($x) + SQRT(($x) * ($x) + 1.0))"
   private def tanhS(x: String) = s"((EXP(($x) * 2.0) - 1.0) / (EXP(($x) * 2.0) + 1.0))"
   private def pmodS(x: String, m: String) = s"((($x) % ($m)) + ($m)) % ($m)"
@@ -41,7 +41,6 @@ object PhysicsQueries extends QueryFamily {
     s"ABS(${pmodS(s"$p1 - $p2 + PI()", "2.0 * PI()")} - PI())"
   private def pxS(pt: String, phi: String) = s"(($pt) * COS($phi))"
   private def pyS(pt: String, phi: String) = s"(($pt) * SIN($phi))"
-  private def pzS(pt: String, eta: String) = s"(($pt) * ${sinhS(eta)})"
   private def eS(pt: String, eta: String, m: String) =
     s"SQRT(($pt) * ($pt) + ${pzS(pt, eta)} * ${pzS(pt, eta)} + ($m) * ($m))"
 

@@ -84,14 +84,10 @@ object StageQueries extends QueryFamily {
       .orderBy(col("event"))
   }
   private val s01Sql = {
-    def sinhS(x: String) = s"((EXP($x) - EXP(-($x))) / 2.0)"
-    def pzS(pt: String, eta: String) = s"(($pt) * ${sinhS(eta)})"
-    def eS(pt: String, eta: String) =
-      s"SQRT(($pt) * ($pt) + ${pzS(pt, eta)} * ${pzS(pt, eta)} + 0.1057 * 0.1057)"
     val sx = "((pt1) * COS(phi1)) + ((pt2) * COS(phi2))"
     val sy = "((pt1) * SIN(phi1)) + ((pt2) * SIN(phi2))"
     val sz = s"${pzS("pt1", "eta1")} + ${pzS("pt2", "eta2")}"
-    val se = s"${eS("pt1", "eta1")} + ${eS("pt2", "eta2")}"
+    val se = s"${muES("pt1", "eta1")} + ${muES("pt2", "eta2")}"
     val mass = s"(SQRT(GREATEST(($se) * ($se) - ($sx) * ($sx) - ($sy) * ($sy) - ($sz) * ($sz), 0.0)) % 160.0)"
     val de = "ABS(eta1 - eta2)"
     val dp = "ABS(((((phi1 - phi2 + PI()) % (2.0 * PI())) + (2.0 * PI())) % (2.0 * PI())) - PI())"

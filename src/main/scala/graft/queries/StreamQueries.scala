@@ -19,17 +19,15 @@ object StreamQueries extends QueryFamily {
   private val GapNs = 8L * HourNs
 
   /** State shards for the stateful queries in this family. The test
-    * corpus has tiny per-key state, so a handful of shards beats the
-    * session's 32-wide batch setting (each micro-batch pays an
-    * open/commit per shard); a production deployment would size this to
-    * its key count via `spark.graft.stream.statePartitions`. See
+    * corpus has tiny per-key state, so a handful of shards is enough
+    * (each micro-batch pays an open/commit per shard); a deployment
+    * with many keys would size this to its key count. See
     * Streams.withStatePartitions. */
-  private def statePartitions(s: SparkSession): Int =
-    s.conf.get("spark.graft.stream.statePartitions", "8").toInt
+  private val StatePartitions = 8
 
   // ---- n01: streaming windowed aggregation -------------------------------
   private def n01(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.windowedAgg(s, dir, fresh("graft_stream_agg"))
     }.orderBy(col("hour_bucket"), col("event_type"))
   private val n01Sql =
@@ -39,7 +37,7 @@ object StreamQueries extends QueryFamily {
 
   // ---- n02: stateful sessionization (flatMapGroupsWithState) -------------
   private def n02(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.sessionize(s, dir, GapNs, fresh("graft_stream_sess"))
     }
       // DuckDB's epoch_ns truncates to microseconds; emit micros on both.
@@ -72,7 +70,7 @@ object StreamQueries extends QueryFamily {
   // The streaming-native form of d01: state keyed by content hash,
   // emitted set equals the batch DISTINCT.
   private def n03(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.streamingDedup(s, dir, fresh("graft_stream_dedup"))
     }.orderBy(col("content_hash"))
   private val n03Sql =
@@ -83,7 +81,7 @@ object StreamQueries extends QueryFamily {
   // so join state is bounded. AvailableNow emits the batch join exactly.
   private val JoinWindowUs = 4L * 3600 * 1000 * 1000
   private def n04(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.streamStreamJoin(s, dir, JoinWindowUs, fresh("graft_stream_join"))
     }.orderBy(col("click_id"), col("purchase_id"))
   private val n04Sql =
@@ -106,7 +104,7 @@ object StreamQueries extends QueryFamily {
   // semantics being checked, not the batch left join.
   private val OuterDelayUs = 3600L * 1000 * 1000 // "1 hour" watermark delay
   private def n08(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.streamStreamLeftOuter(s, dir, JoinWindowUs, "1 hour",
         fresh("graft_stream_louter"))
     }
@@ -144,7 +142,7 @@ object StreamQueries extends QueryFamily {
   // AvailableNow every touched group is emitted once, so the result is
   // the batch aggregate — the low-latency sink shape for dashboards.
   private def n05(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.updateModeAgg(s, dir, fresh("graft_stream_upd"))
     }.orderBy(col("event_type"))
   private val n05Sql =
@@ -171,7 +169,7 @@ object StreamQueries extends QueryFamily {
   // a gap STRICTLY greater than 8h starts a new session).
   private val SessGapUs = 8L * 3600 * 1000 * 1000
   private def n07(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.sessionWindowAgg(s, dir, "8 hours", fresh("graft_stream_sess_win"))
     }.orderBy(col("user_id"), col("ts_start_us"))
   private val n07Sql =
@@ -207,7 +205,7 @@ object StreamQueries extends QueryFamily {
     s.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val updates = Streams.withStatePartitions(s, statePartitions(s)) {
+      val updates = Streams.withStatePartitions(s, StatePartitions) {
         Streams.runningTotals(s, dir, fresh("graft_stream_tws"))
       }
       val w = org.apache.spark.sql.expressions.Window
@@ -238,7 +236,7 @@ object StreamQueries extends QueryFamily {
   // epoch-aligned slide assignment) and aggregates; AvailableNow must
   // reproduce it exactly.
   private def n10(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       Streams.hoppingAgg(s, dir, fresh("graft_stream_hop"))
     }.select(expr("unix_micros(window.start)").as("win_start_us"),
         col("event_type"), col("n_events"),
@@ -267,7 +265,7 @@ object StreamQueries extends QueryFamily {
   // AvailableNow makes the whole pipeline ≡ the batch oracle.
   private val trendK = 3
   private def n11(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       val t = Streams.windowedAgg(s, dir, fresh("graft_stream_topk"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("hour_bucket"))
@@ -304,7 +302,7 @@ object StreamQueries extends QueryFamily {
   private lazy val sfFixture =
     refData("muon_sf/year2018/RunABCD_SF_ID.root")
   private def n12(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       val schema = s.read.parquet(s"$dir/events.parquet").schema
       val sfMap = s.read.format("root-hist").option("path", sfFixture).load()
         .filter(col("hist") === "NUM_TightID_DEN_genTracks_pt_abseta" &&
@@ -455,7 +453,7 @@ object StreamQueries extends QueryFamily {
   // batch SQL replay of the same four forward chains (the n-family
   // convention: streaming answers must equal the batch answers).
   private def n14(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, statePartitions(s)) {
+    Streams.withStatePartitions(s, StatePartitions) {
       val schema = s.read.parquet(s"$dir/events.parquet").schema
       val name = fresh("graft_stream_dnn")
       // the ensemble as a 4-way filtered UNION, not one 4-branch

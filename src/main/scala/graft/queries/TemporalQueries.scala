@@ -816,17 +816,14 @@ object TemporalQueries extends QueryFamily {
        |  ON i.user_id = r.user_id AND i.final_s = r.final_s_rec
        |ORDER BY i.user_id""".stripMargin
 
-  // ---- j14: range join via the OPTIMIZER RULE ------------------------------
+  // ---- j14: range join via the plan REWRITE --------------------------------
   // The same interval containment as j11, but written as the NAIVE
   // theta join — `lo <= x AND x < hi`, no manual bucketing — and
   // rewritten to the Generate + equi-join form by
-  // plans.RangeJoinRewrite (activated through its width conf for the
-  // duration of the build; the localCheckpoint forces execution inside
-  // that window, so the returned frame is the rewritten plan's
-  // result). The oracle is the identical naive SQL — green hash +
-  // RangeJoinRewriteSpec's plan assertions = the rule is lossless AND
-  // actually firing. Intervals: part price bands; points: event
-  // milli-values.
+  // plans.RangeJoinRewrite.on. The oracle is the identical naive SQL —
+  // green hash + RangeJoinRewriteSpec's plan assertions = the rewrite
+  // is lossless AND actually firing. Intervals: part price bands;
+  // points: event milli-values.
   private def j14(s: SparkSession, dir: String): DataFrame = {
     val iv = rd(s, dir, "part")
       .select(col("p_partkey").as("iv_id"),
@@ -836,19 +833,12 @@ object TemporalQueries extends QueryFamily {
     val pt = rd(s, dir, "events")
       .select(col("event_id"),
         expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)").as("x"))
-    val key = graft.plans.RangeJoinRewrite.WidthConf
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "4096") // ~ median band width: ≤ 2 buckets/interval
-    try {
-      iv.join(pt, col("lo") <= col("x") && col("x") < col("hi"))
-        .groupBy(col("iv_id"))
-        .agg(count(lit(1)).as("n_points"), sum(col("x")).as("x_sum"))
-        .orderBy(col("iv_id"))
-        .localCheckpoint() // execute while the rewrite is active
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    // width ~ median band width: ≤ 2 buckets/interval
+    graft.plans.RangeJoinRewrite.on(
+        iv.join(pt, col("lo") <= col("x") && col("x") < col("hi")), 4096)
+      .groupBy(col("iv_id"))
+      .agg(count(lit(1)).as("n_points"), sum(col("x")).as("x_sum"))
+      .orderBy(col("iv_id"))
   }
   private val j14Sql =
     """WITH iv AS (

@@ -75,6 +75,14 @@ package object queries {
     p
   }
 
+  // SQL-text mirrors of Kinematics' portable forms, shared by the
+  // oracles that spell them (same expression tree on both engines).
+  private[queries] def sinhS(x: String) = s"((EXP($x) - EXP(-($x))) / 2.0)"
+  private[queries] def pzS(pt: String, eta: String) = s"(($pt) * ${sinhS(eta)})"
+  /** Energy of a muon-mass (0.1057) object. */
+  private[queries] def muES(pt: String, eta: String) =
+    s"SQRT(($pt) * ($pt) + ${pzS(pt, eta)} * ${pzS(pt, eta)} + 0.1057 * 0.1057)"
+
   /** A query family contributes driver-checkable queries + DuckDB oracles. */
   trait QueryFamily {
     def queries: Map[String, (SparkSession, String) => DataFrame]

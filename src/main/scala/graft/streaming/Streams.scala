@@ -29,14 +29,15 @@ object Streams {
     * `spark.sql.shuffle.partitions` = n, restoring the previous value
     * after. A stateful streaming query fixes its state-store shard count
     * from this setting at FIRST start (it persists in the checkpoint),
-    * independent of the session's later batch setting — so it must be
-    * sized by expected STATE, not by the session's batch shuffle width:
-    * a local AvailableNow drive over test data wants a handful of
-    * partitions (each micro-batch opens/commits one state store per
-    * partition, so 32 shards of near-empty state is pure overhead),
-    * while an always-on deployment with millions of keys wants hundreds.
-    * Not thread-safe (session-global conf) — callers are the sequential
-    * Verify/Bench drivers. */
+    * and Spark has no per-query setting for it — so it is sized here by
+    * expected STATE, not by the session's batch shuffle width, which
+    * `GraftSession` sets to the core count: a local AvailableNow drive
+    * over test data wants a handful of partitions (each micro-batch
+    * opens/commits one state store per partition), while an always-on
+    * deployment with millions of keys wants hundreds. On a host with
+    * fewer cores than `n` the shards outnumber the session's width.
+    * Not thread-safe (session-global conf): no `RunPipeline` chain
+    * starts a stream, and Verify and Bench run queries one at a time. */
   def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)

@@ -4,10 +4,10 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** ApproxDistinctRewrite: gated rewrite of exact single-column
-  * COUNT(DISTINCT) to the HLL register aggregate + estimate. Inert
-  * without the conf; accurate within the p = 12 error envelope with
-  * it; out of scope shapes (multi-column distinct) stay exact. */
+/** ApproxDistinctRewrite: opt-in rewrite of exact single-column
+  * COUNT(DISTINCT) to the HLL register aggregate + estimate. Exact
+  * without `on`; accurate within the p = 12 error envelope with it;
+  * out of scope shapes (multi-column distinct) stay exact. */
 class ApproxDistinctSpec extends SparkSpec {
 
   private def data: DataFrame = {
@@ -16,16 +16,10 @@ class ApproxDistinctSpec extends SparkSpec {
     (1L to 50000L).map(i => (i % 5, i % 3000)).toDF("g", "v")
   }
 
-  /** Runs `body` with the rule's enable conf on or unset. The rule
-    * itself is the one GraftExtensions injected into the session. */
-  private def withRule[T](enabled: Boolean)(body: => T): T = {
-    if (enabled) spark.conf.set(ApproxDistinctRewrite.EnabledConf, "true")
-    try body finally spark.conf.unset(ApproxDistinctRewrite.EnabledConf)
-  }
-
   test("count(distinct) rewrites to the HLL aggregate and stays within 10%") {
-    val approx = withRule(enabled = true) {
-      val out = data.groupBy(col("g")).agg(countDistinct(col("v")).as("nd"))
+    val approx = {
+      val out = ApproxDistinctRewrite.on(
+        data.groupBy(col("g")).agg(countDistinct(col("v")).as("nd")))
       val plan = out.queryExecution.optimizedPlan.toString
       assert(plan.contains("hll_registers"), s"rewrite did not fire:\n$plan")
       assert(plan.contains("hll_estimate"), s"no estimate fold:\n$plan")
@@ -41,11 +35,9 @@ class ApproxDistinctSpec extends SparkSpec {
     }
   }
 
-  test("rule is inert when the conf is unset") {
-    withRule(enabled = false) {
-      val out = data.groupBy(col("g")).agg(countDistinct(col("v")).as("nd"))
-      assert(!out.queryExecution.optimizedPlan.toString.contains("hll_registers"))
-    }
+  test("count(distinct) stays exact without the rewrite") {
+    val out = data.groupBy(col("g")).agg(countDistinct(col("v")).as("nd"))
+    assert(!out.queryExecution.optimizedPlan.toString.contains("hll_registers"))
   }
 
   test("NULL inputs do not register phantom distinct elements") {
@@ -59,8 +51,9 @@ class ApproxDistinctSpec extends SparkSpec {
       (0L, 1L), (0L, 2L), (0L, null), (0L, null),
       (1L, null), (1L, null), (1L, null)
     ).toDF("g", "v")
-    val approx = withRule(enabled = true) {
-      val out = df.groupBy(col("g")).agg(countDistinct(col("v")).as("nd"))
+    val approx = {
+      val out = ApproxDistinctRewrite.on(
+        df.groupBy(col("g")).agg(countDistinct(col("v")).as("nd")))
       assert(out.queryExecution.optimizedPlan.toString.contains("hll_registers"))
       out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
@@ -69,12 +62,10 @@ class ApproxDistinctSpec extends SparkSpec {
   }
 
   test("multi-column distinct counts are out of scope and stay exact") {
-    withRule(enabled = true) {
-      val out = data.groupBy(col("g"))
-        .agg(countDistinct(col("v"), col("g")).as("nd"))
-      assert(!out.queryExecution.optimizedPlan.toString.contains("hll_registers"))
-      // and the exact value is returned
-      assert(out.collect().forall(_.getLong(1) > 0))
-    }
+    val out = ApproxDistinctRewrite.on(data.groupBy(col("g"))
+      .agg(countDistinct(col("v"), col("g")).as("nd")))
+    assert(!out.queryExecution.optimizedPlan.toString.contains("hll_registers"))
+    // and the exact value is returned
+    assert(out.collect().forall(_.getLong(1) > 0))
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SpatialJoinRewrite: the naive `within_radius` theta self-join must
-  * (a) plan as a nested-loop join when the rule is off, (b) become a
-  * cell-keyed HASH join with a 9-cell Generate when on, and (c) return
+  * (a) plan as a nested-loop join without `on`, (b) become a
+  * cell-keyed HASH join with a 9-cell Generate after it, and (c) return
   * the identical row set either way — losslessness is the contract that
   * lets j19's oracle stay the naive SQL. */
 class SpatialJoinRewriteSpec extends SparkSpec {
@@ -29,32 +29,22 @@ class SpatialJoinRewriteSpec extends SparkSpec {
       .select(col("a_id"), col("b_id"))
   }
 
-  /** Runs `body` with the rule's enable conf on. The rule itself is the
-    * one GraftExtensions injected into the session, as in j19. */
-  private def withRule[T](body: => T): T = {
-    spark.conf.set(SpatialJoinRewrite.EnabledConf, "true")
-    try body finally spark.conf.unset(SpatialJoinRewrite.EnabledConf)
-  }
-
   test("rule off: nested loop; rule on: cell equi-join with Generate") {
     val off = naiveJoin.queryExecution.executedPlan.toString
     assert(off.contains("NestedLoop") || off.contains("CartesianProduct"),
       s"expected a nested-loop baseline:\n$off")
-    withRule {
-      val on = naiveJoin.queryExecution.executedPlan.toString
-      assert(!on.contains("NestedLoop") && !on.contains("CartesianProduct"),
-        s"rule did not fire:\n$on")
-      assert(on.contains("Generate"), s"no 9-cell explode:\n$on")
-      assert(on.contains("HashJoin") || on.contains("SortMergeJoin"),
-        s"no keyed join:\n$on")
-    }
+    val on = SpatialJoinRewrite.on(naiveJoin).queryExecution.executedPlan.toString
+    assert(!on.contains("NestedLoop") && !on.contains("CartesianProduct"),
+      s"rule did not fire:\n$on")
+    assert(on.contains("Generate"), s"no 9-cell explode:\n$on")
+    assert(on.contains("HashJoin") || on.contains("SortMergeJoin"),
+      s"no keyed join:\n$on")
   }
 
   test("rewrite is lossless: identical pairs with and without the rule") {
     val expected = naiveJoin.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val got = withRule {
-      naiveJoin.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    }
+    val got = SpatialJoinRewrite.on(naiveJoin).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(got.length == expected.length,
       s"pair count ${got.length} vs ${expected.length}")
     assert(got.sameElements(expected), "pair sets differ")
@@ -66,13 +56,34 @@ class SpatialJoinRewriteSpec extends SparkSpec {
       col("y").as("ay"), (col("id") % 7).as("ka"))
     val b = pts.select(col("id").as("b_id"), col("x").as("bx"),
       col("y").as("by"), (col("id") % 7).as("kb"))
-    withRule {
-      val plan = a.join(b, col("ka") === col("kb") &&
-          expr("within_radius(ax, ay, bx, by, 1.5D)"))
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("Generate"),
-        s"rule fired despite existing equi-key:\n$plan")
-    }
+    val plan = SpatialJoinRewrite.on(a.join(b, col("ka") === col("kb") &&
+        expr("within_radius(ax, ay, bx, by, 1.5D)")))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Generate"),
+      s"rule fired despite existing equi-key:\n$plan")
+  }
+
+  test("a foldable radius that is not yet a literal is rewritten too") {
+    val a = pts.select(col("id").as("a_id"), col("x").as("ax"), col("y").as("ay"))
+    val b = pts.select(col("id").as("b_id"), col("x").as("bx"), col("y").as("by"))
+    val cast = a.join(b, expr("within_radius(ax, ay, bx, by, CAST(1.5 AS DOUBLE))") &&
+        col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"))
+    val rewritten = SpatialJoinRewrite.on(cast)
+    val plan = rewritten.queryExecution.executedPlan.toString
+    assert(plan.contains("Generate"), s"foldable radius not rewritten:\n$plan")
+    val pairs = (df: DataFrame) =>
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(pairs(rewritten) == pairs(naiveJoin))
+  }
+
+  test("a radius predicate written as a .where above the join is left as written") {
+    val a = pts.select(col("id").as("a_id"), col("x").as("ax"), col("y").as("ay"))
+    val b = pts.select(col("id").as("b_id"), col("x").as("bx"), col("y").as("by"))
+    val plan = SpatialJoinRewrite.on(a.join(b)
+        .where(expr("within_radius(ax, ay, bx, by, 1.5D)")))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Generate"), s"rewrite saw a .where predicate:\n$plan")
   }
 
   test("within_radius evaluates the exact arithmetic incl. nulls") {
