@@ -122,10 +122,8 @@ object Bench {
     // dev-only subset filter; the driver never sets this
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val listener = new ExecMetricsListener
-    spark.sparkContext.addSparkListener(listener)
     // per-query (shuffleWrite, spillMem, spillDisk, peakExecMem) bytes
-    val execMetrics = Seq.newBuilder[(String, (Long, Long, Long, Long))]
+    val listener = new ExecMetricsListener(spark.sparkContext)
     // dev-only steady-state mode (SPARK_GRAFT_WARM=1): run each query
     // once unmeasured before timing it, so codegen/JIT compilation does
     // not land in the first measured query — solo/subset runs otherwise
@@ -172,6 +170,8 @@ object Bench {
         // hint buys only ~4 % (311.3 vs 324.5 raw at sf3): kept as a
         // measurement aid, between passes, outside every timed window.
         System.gc()
+        // discard the warm pass's task metrics, as the rerun's are
+        listener.snapshot()
       }
       val beforeMeasured =
         if (warmRuns) spark.sparkContext.getPersistentRDDs.keySet
@@ -190,11 +190,9 @@ object Bench {
       if (warmRuns)
         spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
           if (!beforeMeasured.contains(id)) rdd.unpersist(blocking = true) }
-      // drain the listener bus so late task-end events attribute to the
-      // query that produced them (sequential execution ⇒ exact)
-      org.apache.spark.sql.classic.GraftBridge
-        .drainListenerBus(spark.sparkContext, 2000L)
-      execMetrics += (name -> listener.snapshot())
+      // sequential execution: the metrics since the last snapshot are
+      // exactly this query's
+      listener.record(name)
       name -> dt
     }
     // Prior per-query times from the last committed same-SF run
@@ -279,10 +277,8 @@ object Bench {
         if (warmRuns)
           spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
             if (!beforeRerun.contains(id)) rdd.unpersist(blocking = true) }
-        // drain + discard the rerun's task metrics so the per-query
+        // discard the rerun's task metrics so the per-query
         // exec_metrics attribution stays first-run exact
-        org.apache.spark.sql.classic.GraftBridge
-          .drainListenerBus(spark.sparkContext, 2000L)
         listener.snapshot()
         reruns += (name -> math.min(dt, dt2))
       }
@@ -300,15 +296,6 @@ object Bench {
       .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // Per-query execution metrics (bytes): shuffle write, spill
-    // (memory+disk), peak execution memory. Zero-rows are elided so the
-    // record stays compact — most of the 317 queries neither shuffle
-    // much nor spill at bench SF; the ones that DO are exactly the ones
-    // a bench excursion postmortem needs (round-7 d09/d10).
-    val em = execMetrics.result().collect {
-      case (k, (sw, sm, sd, pm)) if sw > 0 || sm > 0 || sd > 0 =>
-        s""""$k":{"shuffle_write":$sw,"spill_mem":$sm,"spill_disk":$sd,"peak_exec_mem":$pm}"""
-    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val totalSteady = steadyResults.map(_._2).sum
     // End-to-end pipeline headline (round-12 verdict ask #7): the whole
@@ -325,8 +312,6 @@ object Bench {
         val t0 = System.nanoTime()
         RunPipeline.run(spark, sfDir, tmp)
         val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.classic.GraftBridge
-          .drainListenerBus(spark.sparkContext, 2000L)
         listener.snapshot() // keep exec_metrics per-query exact
         try {
           import scala.jdk.CollectionConverters._
@@ -401,7 +386,7 @@ object Bench {
       .map(lf => f""","load_factor":$lf%.3f""").getOrElse("")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""exec_metrics":$em,"reruns":$rr,"total_steady":$totalSteady,""" +
+        s""""exec_metrics":${listener.json},"reruns":$rr,"total_steady":$totalSteady,""" +
         s"""$calibFields,"sf":"$sfDir"$lfField$pipelineField}"""
     // The driver retains only a ~2 KB stdout TAIL, and the per-query map
     // is ~8 KB — so the full record goes out first (bare line, for

@@ -48,9 +48,7 @@ object Verify {
     // tools/shuffle_exponent.py diffs two of these files and flags any
     // query whose shuffle bytes grow superlinearly (known
     // contract-quadratics exempted inline there).
-    val listener = new ExecMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val execMetrics = Seq.newBuilder[(String, (Long, Long, Long, Long))]
+    val listener = new ExecMetricsListener(spark.sparkContext)
     val failed = Seq.newBuilder[String]
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -69,15 +67,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
       }
-      org.apache.spark.sql.classic.GraftBridge
-        .drainListenerBus(spark.sparkContext, 2000L)
-      execMetrics += (name -> listener.snapshot())
+      listener.record(name)
     }
-    val em = execMetrics.result().collect {
-      case (k, (sw, sm, sd, pm)) if sw > 0 || sm > 0 || sd > 0 =>
-        s""""$k":{"shuffle_write":$sw,"spill_mem":$sm,"spill_disk":$sd,"peak_exec_mem":$pm}"""
-    }.mkString("{", ",", "}")
-    try Files.writeString(Paths.get(s"$outDir/exec_metrics.json"), em)
+    try Files.writeString(Paths.get(s"$outDir/exec_metrics.json"), listener.json)
     catch { case e: Throwable =>
       System.err.println(s"[verify] exec_metrics write failed: ${e.getMessage}")
     }

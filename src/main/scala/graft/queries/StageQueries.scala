@@ -196,14 +196,11 @@ object StageQueries extends QueryFamily {
   // datacard's numeric core. All small-data aggregation over s03's
   // output shape.
   private def s04(s: SparkSession, dir: String): DataFrame =
-    // materialize the (tiny) stage-2 histogram once: without this the
-    // template stage's window+pivot would re-derive the whole lineitem
-    // subtree — a harmless re-plan here, a double 100 TB scan in prod
-    templates(s03(s, dir).localCheckpoint())
+    templates(s03(s, dir))
 
   /** Stage-3 template yields from a stage-2 histogram table (s03's
-    * shape). The caller hands in a materialized histogram, so the
-    * lineitem subtree behind it is not planned or run again. */
+    * shape). It reads `hist` once: the pivot, window and yield
+    * aggregation form one chain, so s04 scans lineitem once. */
   def templates(hist: DataFrame): DataFrame = {
     val pivoted = hist.groupBy(col("region"), col("channel"), col("bin"))
       .agg(

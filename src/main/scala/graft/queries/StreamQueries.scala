@@ -1,35 +1,27 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.Streams
+import graft.streaming.Streams.HourNs
 
 /** Structured Streaming operators, oracle-checked: driven with
   * `Trigger.AvailableNow`, a streaming computation must produce exactly
-  * the batch answer, so the DuckDB oracle is the batch SQL.
+  * the batch answer, so the DuckDB oracle is the batch SQL. Every query
+  * runs its stream through `Streams`' one drive: a memory sink, 8 state
+  * shards, and no conf left set afterwards. `Streams.runningTotals`
+  * sets n09's RocksDB state store itself, so no builder here sets a
+  * conf.
   */
 object StreamQueries extends QueryFamily {
 
-  private val runId = new AtomicInteger(0)
-  private def fresh(prefix: String) = s"${prefix}_${runId.incrementAndGet()}"
-
-  private val HourNs = 3600L * 1000 * 1000 * 1000
   private val GapNs = 8L * HourNs
-
-  /** State shards for the stateful queries in this family. The test
-    * corpus has tiny per-key state, so a handful of shards is enough
-    * (each micro-batch pays an open/commit per shard); a deployment
-    * with many keys would size this to its key count. See
-    * Streams.withStatePartitions. */
-  private val StatePartitions = 8
 
   // ---- n01: streaming windowed aggregation -------------------------------
   private def n01(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.windowedAgg(s, dir, fresh("graft_stream_agg"))
-    }.orderBy(col("hour_bucket"), col("event_type"))
+    Streams.windowedAgg(s, dir).orderBy(col("hour_bucket"), col("event_type"))
   private val n01Sql =
     s"""SELECT epoch_ns(ts) // $HourNs AS hour_bucket, event_type,
        | COUNT(*) AS n_events, CAST(SUM(value) AS REAL) AS sum_value
@@ -37,9 +29,7 @@ object StreamQueries extends QueryFamily {
 
   // ---- n02: stateful sessionization (flatMapGroupsWithState) -------------
   private def n02(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.sessionize(s, dir, GapNs, fresh("graft_stream_sess"))
-    }
+    Streams.sessionize(s, dir, GapNs)
       // DuckDB's epoch_ns truncates to microseconds; emit micros on both.
       // sum_value comes from the exact milli-scaled long fold — a plain
       // double fold is order-dependent and DuckDB aggregates in its own
@@ -70,9 +60,7 @@ object StreamQueries extends QueryFamily {
   // The streaming-native form of d01: state keyed by content hash,
   // emitted set equals the batch DISTINCT.
   private def n03(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.streamingDedup(s, dir, fresh("graft_stream_dedup"))
-    }.orderBy(col("content_hash"))
+    Streams.streamingDedup(s, dir).orderBy(col("content_hash"))
   private val n03Sql =
     "SELECT DISTINCT md5(text) AS content_hash FROM documents ORDER BY 1"
 
@@ -81,9 +69,8 @@ object StreamQueries extends QueryFamily {
   // so join state is bounded. AvailableNow emits the batch join exactly.
   private val JoinWindowUs = 4L * 3600 * 1000 * 1000
   private def n04(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.streamStreamJoin(s, dir, JoinWindowUs, fresh("graft_stream_join"))
-    }.orderBy(col("click_id"), col("purchase_id"))
+    Streams.streamStreamJoin(s, dir, JoinWindowUs)
+      .orderBy(col("click_id"), col("purchase_id"))
   private val n04Sql =
     s"""SELECT c.event_id AS click_id, p.event_id AS purchase_id,
        | c.user_id, epoch_ns(p.ts) // 1000 - epoch_ns(c.ts) // 1000 AS lag_us
@@ -104,10 +91,7 @@ object StreamQueries extends QueryFamily {
   // semantics being checked, not the batch left join.
   private val OuterDelayUs = 3600L * 1000 * 1000 // "1 hour" watermark delay
   private def n08(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.streamStreamLeftOuter(s, dir, JoinWindowUs, "1 hour",
-        fresh("graft_stream_louter"))
-    }
+    Streams.streamStreamLeftOuter(s, dir, JoinWindowUs, "1 hour")
       // null-extended rows as -1 sentinels: nullable int64 columns decay
       // to float64 in pandas-mediated hash compares (nulls force the
       // cast), so the dtype would differ between engines
@@ -142,9 +126,7 @@ object StreamQueries extends QueryFamily {
   // AvailableNow every touched group is emitted once, so the result is
   // the batch aggregate — the low-latency sink shape for dashboards.
   private def n05(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.updateModeAgg(s, dir, fresh("graft_stream_upd"))
-    }.orderBy(col("event_type"))
+    Streams.updateModeAgg(s, dir).orderBy(col("event_type"))
   private val n05Sql =
     """SELECT event_type, COUNT(*) AS n_events,
       | CAST(SUM(value) AS REAL) AS sum_value
@@ -154,8 +136,7 @@ object StreamQueries extends QueryFamily {
   // Stateless per-batch join to a dimension table — no watermark, no
   // state store; with AvailableNow the result is exactly the batch join.
   private def n06(s: SparkSession, dir: String): DataFrame =
-    Streams.streamStaticJoin(s, dir, fresh("graft_stream_dim"))
-      .orderBy(col("event_id"))
+    Streams.streamStaticJoin(s, dir).orderBy(col("event_id"))
   private val n06Sql =
     """SELECT event_id, user_id, n_name
       |FROM events JOIN nation ON user_id % 25 = n_nationkey
@@ -169,9 +150,8 @@ object StreamQueries extends QueryFamily {
   // a gap STRICTLY greater than 8h starts a new session).
   private val SessGapUs = 8L * 3600 * 1000 * 1000
   private def n07(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.sessionWindowAgg(s, dir, "8 hours", fresh("graft_stream_sess_win"))
-    }.orderBy(col("user_id"), col("ts_start_us"))
+    Streams.sessionWindowAgg(s, dir, "8 hours")
+      .orderBy(col("user_id"), col("ts_start_us"))
   private val n07Sql =
     s"""WITH x AS (
        | SELECT user_id, epoch_ns(ts) // 1000 AS us,
@@ -200,24 +180,12 @@ object StreamQueries extends QueryFamily {
   // keeps the fold order-free, so the DuckDB oracle is the plain batch
   // aggregate. The per-user window is key-partitioned (distributed).
   private def n09(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val updates = Streams.withStatePartitions(s, StatePartitions) {
-        Streams.runningTotals(s, dir, fresh("graft_stream_tws"))
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-      updates.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("user_id"), col("n_events"), col("vm_sum"), col("vm_max"),
-          expr("CAST(vm_sum / 1000.0 AS FLOAT)").as("sum_value"))
-        .orderBy(col("user_id"))
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
+    val w = Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)
+    Streams.runningTotals(s, dir)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("user_id"), col("n_events"), col("vm_sum"), col("vm_max"),
+        expr("CAST(vm_sum / 1000.0 AS FLOAT)").as("sum_value"))
+      .orderBy(col("user_id"))
   }
   private val n09Sql =
     """WITH q AS (
@@ -236,9 +204,7 @@ object StreamQueries extends QueryFamily {
   // epoch-aligned slide assignment) and aggregates; AvailableNow must
   // reproduce it exactly.
   private def n10(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      Streams.hoppingAgg(s, dir, fresh("graft_stream_hop"))
-    }.select(expr("unix_micros(window.start)").as("win_start_us"),
+    Streams.hoppingAgg(s, dir).select(expr("unix_micros(window.start)").as("win_start_us"),
         col("event_type"), col("n_events"),
         expr("CAST(vm_sum / 1000.0 AS FLOAT)").as("sum_value"))
       .orderBy(col("win_start_us"), col("event_type"))
@@ -264,18 +230,16 @@ object StreamQueries extends QueryFamily {
   // scale the sink is a keyed store and the rank is the reader's query;
   // AvailableNow makes the whole pipeline ≡ the batch oracle.
   private val trendK = 3
-  private def n11(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      val t = Streams.windowedAgg(s, dir, fresh("graft_stream_topk"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("hour_bucket"))
-        .orderBy(col("n_events").desc, col("event_type").asc)
-      t.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= trendK)
-        .select(col("hour_bucket"), col("rank"), col("event_type"),
-          col("n_events"))
-        .orderBy(col("hour_bucket"), col("rank"))
-    }
+  private def n11(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy(col("hour_bucket"))
+      .orderBy(col("n_events").desc, col("event_type").asc)
+    Streams.windowedAgg(s, dir)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= trendK)
+      .select(col("hour_bucket"), col("rank"), col("event_type"),
+        col("n_events"))
+      .orderBy(col("hour_bucket"), col("rank"))
+  }
   private val n11Sql =
     s"""WITH agg AS (
        | SELECT epoch_ns(ts) // $HourNs AS hour_bucket, event_type,
@@ -301,38 +265,28 @@ object StreamQueries extends QueryFamily {
   // the batch SQL over the independently parsed literal map.
   private lazy val sfFixture =
     refData("muon_sf/year2018/RunABCD_SF_ID.root")
-  private def n12(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val sfMap = s.read.format("root-hist").option("path", sfFixture).load()
-        .filter(col("hist") === "NUM_TightID_DEN_genTracks_pt_abseta" &&
-          col("binx").between(1, 6) && col("biny").between(1, 4))
-        .select(col("x_low"), col("x_high"), col("y_low"), col("y_high"),
-          expr("CAST(FLOOR(content * 1000000.0 + 0.5) AS BIGINT)")
-            .as("sf_micro"))
-      val name = fresh("graft_stream_rootsf")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .transform(graft.queries.normalizeEventTs)
-        .withColumn("pt", lit(20.0) + col("value") % 100.0)
-        .withColumn("abseta", (col("user_id") % 24).cast("double") / 10.0)
-      val agg = stream.join(broadcast(sfMap),
-          col("pt") >= col("x_low") && col("pt") < col("x_high") &&
-            col("abseta") >= col("y_low") && col("abseta") < col("y_high"))
-        .withColumn("hour_bucket", expr(s"ts div $HourNs"))
-        .groupBy(col("hour_bucket"))
-        .agg(count(lit(1)).as("n_events"), sum(col("sf_micro")).as("sf_sum"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
-    }
+  private def n12(s: SparkSession, dir: String): DataFrame = {
+    val sfMap = s.read.format("root-hist").option("path", sfFixture).load()
+      .filter(col("hist") === "NUM_TightID_DEN_genTracks_pt_abseta" &&
+        col("binx").between(1, 6) && col("biny").between(1, 4))
+      .select(col("x_low"), col("x_high"), col("y_low"), col("y_high"),
+        expr("CAST(FLOOR(content * 1000000.0 + 0.5) AS BIGINT)")
+          .as("sf_micro"))
+    val agg = Streams.source(s, dir, "events")
+      .withColumn("pt", lit(20.0) + col("value") % 100.0)
+      .withColumn("abseta", (col("user_id") % 24).cast("double") / 10.0)
+      .join(broadcast(sfMap),
+        col("pt") >= col("x_low") && col("pt") < col("x_high") &&
+          col("abseta") >= col("y_low") && col("abseta") < col("y_high"))
+      .withColumn("hour_bucket", expr(s"ts div $HourNs"))
+      .groupBy(col("hour_bucket"))
+      .agg(count(lit(1)).as("n_events"), sum(col("sf_micro")).as("sf_sum"))
+    Streams.drain(agg, OutputMode.Complete())
       .select(col("hour_bucket"), col("n_events"), col("sf_sum"),
         (col("sf_sum").cast("double") / col("n_events") / 1000000.0)
           .cast("float").as("avg_sf"))
       .orderBy(col("hour_bucket"))
+  }
   private val n12Sql =
     s"""WITH sfmap(x_low, x_high, y_low, y_high, sf) AS (VALUES
        |(20.0, 25.0, 0.0, 0.9, 0.9809958066072726), (25.0, 30.0, 0.0, 0.9, 0.9907079683443358),
@@ -452,39 +406,29 @@ object StreamQueries extends QueryFamily {
   // aggregation. Scores micro-quantize before the sum; oracle = the
   // batch SQL replay of the same four forward chains (the n-family
   // convention: streaming answers must equal the batch answers).
-  private def n14(s: SparkSession, dir: String): DataFrame =
-    Streams.withStatePartitions(s, StatePartitions) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name = fresh("graft_stream_dnn")
-      // the ensemble as a 4-way filtered UNION, not one 4-branch
-      // CaseWhen: each branch is an m35-sized projection that stays in
-      // whole-stage codegen; the single CaseWhen form compiled out of
-      // codegen in the streaming plan and ran interpreted (measured
-      // 84.7 s vs ~5 s at sf0.1 bench)
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .select(col("event_id"))
-      val scored = (0 until 4).map { e =>
-        val model = (e + 1) % 4
-        src.filter(col("event_id") % 4 === e)
-          .select(col("event_id"),
-            MLQueries.vbfScoreFor(MLQueries.vbfH0For(model), model).as("score"))
-      }.reduce(_ union _)
-      val agg = scored
-        .withColumn("decile",
-          least(floor(col("score") * 10.0).cast("int"), lit(9)))
-        .withColumn("score_micro",
-          expr("CAST(FLOOR(score * 1000000.0 + 0.5) AS BIGINT)"))
-        .groupBy(col("decile"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("score_micro")).as("score_micro_sum"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
-    }.orderBy(col("decile"))
+  private def n14(s: SparkSession, dir: String): DataFrame = {
+    // the ensemble as a 4-way filtered UNION, not one 4-branch
+    // CaseWhen: each branch is an m35-sized projection that stays in
+    // whole-stage codegen; the single CaseWhen form compiled out of
+    // codegen in the streaming plan and ran interpreted (measured
+    // 84.7 s vs ~5 s at sf0.1 bench)
+    val src = Streams.source(s, dir, "events").select(col("event_id"))
+    val scored = (0 until 4).map { e =>
+      val model = (e + 1) % 4
+      src.filter(col("event_id") % 4 === e)
+        .select(col("event_id"),
+          MLQueries.vbfScoreFor(MLQueries.vbfH0For(model), model).as("score"))
+    }.reduce(_ union _)
+    val agg = scored
+      .withColumn("decile",
+        least(floor(col("score") * 10.0).cast("int"), lit(9)))
+      .withColumn("score_micro",
+        expr("CAST(FLOOR(score * 1000000.0 + 0.5) AS BIGINT)"))
+      .groupBy(col("decile"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("score_micro")).as("score_micro_sum"))
+    Streams.drain(agg, OutputMode.Complete()).orderBy(col("decile"))
+  }
   private lazy val n14Sql = {
     val folds = (0 until 4).map { e =>
       val model = (e + 1) % 4

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -14,6 +15,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * results are exactly the batch answers, which is what the DuckDB
   * oracle checks.
   *
+  * Every operator reads its table through [[source]] and runs through
+  * one drive, [[drain]]: a memory sink, `AvailableNow`, and
+  * [[StatePartitions]] state shards. The drive is the one place that
+  * sets session confs, and it restores them when the stream ends.
+  *
   * Scale: state is keyed (bucket/user), so it shards across executors;
   * an always-on deployment would add a watermark to bound state — noted
   * where it applies.
@@ -23,50 +29,92 @@ object Streams {
   /** Hour bucket from a nanosecond epoch (integer division — the ts
     * magnitude exceeds a double's 53-bit mantissa, so float division
     * would corrupt the bucket). */
-  private val HourNs = 3600L * 1000 * 1000 * 1000
+  private[graft] val HourNs = 3600L * 1000 * 1000 * 1000
 
-  /** Run `body` (which starts and drains a streaming query) with
-    * `spark.sql.shuffle.partitions` = n, restoring the previous value
-    * after. A stateful streaming query fixes its state-store shard count
-    * from this setting at FIRST start (it persists in the checkpoint),
-    * and Spark has no per-query setting for it — so it is sized here by
-    * expected STATE, not by the session's batch shuffle width, which
-    * `GraftSession` sets to the core count: a local AvailableNow drive
-    * over test data wants a handful of partitions (each micro-batch
-    * opens/commits one state store per partition), while an always-on
-    * deployment with millions of keys wants hundreds. On a host with
-    * fewer cores than `n` the shards outnumber the session's width.
-    * Not thread-safe (session-global conf): no `RunPipeline` chain
-    * starts a stream, and Verify and Bench run queries one at a time. */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  /** State shards of every drive: `spark.sql.shuffle.partitions` while a
+    * stream runs. A stateful streaming query fixes its state-store shard
+    * count from this setting at FIRST start (it persists in the
+    * checkpoint), and Spark has no per-query setting for it — so it is
+    * sized by expected STATE, not by the session's batch shuffle width,
+    * which `GraftSession` sets to the core count. The test corpus has
+    * tiny per-key state and each micro-batch opens and commits one store
+    * per shard, so a handful is enough; a deployment with millions of
+    * keys wants hundreds. */
+  private val StatePartitions = 8
+
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  private val sinks = new AtomicInteger(0)
+
+  /** `<table>.parquet` under `dir` as a file stream, with the batch
+    * read's schema and `ts` normalized as in batch (tables without `ts`
+    * pass unchanged). The file source needs a directory, so it reads
+    * `dir` glob-filtered to the table's file. */
+  private[graft] def source(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val file = s"$table.parquet"
+    spark.readStream.schema(spark.read.parquet(s"$dir/$file").schema)
+      .option("pathGlobFilter", file).parquet(dir)
+      .transform(graft.queries.normalizeEventTs)
+  }
+
+  /** Runs `stream` to completion into a memory sink in `mode`
+    * (`AvailableNow` processes the backlog and stops) and returns the
+    * sink's rows. While it runs, the session has [[StatePartitions]]
+    * shuffle partitions and, with `rocksDb`, the RocksDB state store
+    * provider; Spark reads both when a streaming query first starts.
+    * Both are restored afterwards, so a provider the caller set stays.
+    * The sink's temp view is dropped once the result is built: the
+    * result keeps its analysed plan and so its rows, and the catalog
+    * does not collect one view per run. Not thread-safe (session-global
+    * confs): no `RunPipeline` chain starts a stream, and Verify and
+    * Bench run queries one at a time. */
+  private[graft] def drain(stream: DataFrame, mode: OutputMode,
+                           rocksDb: Boolean = false): DataFrame = {
+    val spark = stream.sparkSession
+    val confs = ("spark.sql.shuffle.partitions" -> StatePartitions.toString) +:
+      (if (rocksDb) Seq(ProviderKey -> RocksDbProvider) else Nil)
+    val explicit = spark.conf.getAll // keys set on the session, not defaults
+    val prev = confs.map { case (k, _) => k -> explicit.get(k) }
+    val name = s"graft_stream_${sinks.incrementAndGet()}"
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      stream.writeStream.format("memory").queryName(name).outputMode(mode)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      spark.table(name)
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      spark.catalog.dropTempView(name)
+    }
   }
 
   /** Windowed weighted aggregation over a file stream: one row per
-    * (hour, event_type) with count and value sum. Complete-mode memory
-    * sink; AvailableNow processes the backlog and stops. */
-  def windowedAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // the file source needs a directory; glob-filter to the events table
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-    val agg = stream
+    * (hour, event_type) with count and value sum. Complete mode. */
+  def windowedAgg(spark: SparkSession, dir: String): DataFrame =
+    drain(source(spark, dir, "events")
       .withColumn("hour_bucket", expr(s"ts div $HourNs"))
       .groupBy(col("hour_bucket"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value")).cast("float").as("sum_value"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+           sum(col("value")).cast("float").as("sum_value")),
+      OutputMode.Complete())
+
+  /** HOPPING (sliding) windowed aggregation: 1-hour windows every
+    * 15 minutes — each event lands in 4 overlapping windows, the state
+    * shape tumbling windows never exercise. Milli-long quantization
+    * keeps the overlapping sums order-free; complete mode,
+    * AvailableNow ≡ the batch explode-4-hops answer. */
+  def hoppingAgg(spark: SparkSession, dir: String): DataFrame =
+    drain(source(spark, dir, "events")
+      .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
+      .withColumn("vm", expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)"))
+      .groupBy(window(col("event_time"), "1 hour", "15 minutes"),
+        col("event_type"))
+      .agg(count(lit(1)).as("n_events"), sum(col("vm")).as("vm_sum")),
+      OutputMode.Complete())
 
   /** Append-mode windowed aggregation with an event-time watermark —
     * the always-on deployment shape: state for a window is dropped once
@@ -75,51 +123,14 @@ object Streams {
     * max(event_time) - delay at the batch boundary, so emitted windows
     * are exactly the batch windows strictly below that line (checked in
     * StreamsSpec). */
-  /** HOPPING (sliding) windowed aggregation: 1-hour windows every
-    * 15 minutes — each event lands in 4 overlapping windows, the state
-    * shape tumbling windows never exercise. Milli-long quantization
-    * keeps the overlapping sums order-free; Complete-mode memory sink,
-    * AvailableNow ≡ the batch explode-4-hops answer. */
-  def hoppingAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-      .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
-      .withColumn("vm", expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)"))
-    val agg = stream
-      .groupBy(window(col("event_time"), "1 hour", "15 minutes"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("vm")).as("vm_sum"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
-  def windowedAggWatermarked(spark: SparkSession, dir: String, delay: String,
-                             queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-    val agg = stream
+  def windowedAggWatermarked(spark: SparkSession, dir: String, delay: String): DataFrame =
+    drain(source(spark, dir, "events")
       .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
       .withWatermark("event_time", delay)
       .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value")).cast("float").as("sum_value"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+           sum(col("value")).cast("float").as("sum_value")),
+      OutputMode.Append())
 
   /** First-class streaming session windows: the SAME
     * `session_window(ts, gap)` operator u03 runs in batch, under
@@ -131,13 +142,8 @@ object Streams {
     * — exactly the batch sessionization, u03's gaps-and-islands SQL. Sums use the exact
     * milli-scaled-long convention (a double fold is order-dependent
     * across engines). */
-  def sessionWindowAgg(spark: SparkSession, dir: String, gap: String,
-                       queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-    val agg = stream
+  def sessionWindowAgg(spark: SparkSession, dir: String, gap: String): DataFrame =
+    drain(source(spark, dir, "events")
       .select(col("user_id"),
         expr("timestamp_micros(ts div 1000)").as("event_time"),
         expr("CAST(FLOOR(value * 1000 + 0.5) AS BIGINT)").as("vm"))
@@ -148,56 +154,52 @@ object Streams {
         expr("unix_micros(session_window.start)").as("ts_start_us"),
         expr("unix_micros(session_window.end)").as("ts_end_us"),
         col("n_events"),
-        (col("vm_sum") / 1000.0).cast("float").as("sum_value"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+        (col("vm_sum") / 1000.0).cast("float").as("sum_value")),
+      OutputMode.Complete())
 
   /** Update-mode aggregation: emits rows whose aggregate changed per
     * batch — the low-latency dashboard sink. One AvailableNow batch
     * touches every group once, so the emitted set is the batch answer. */
-  def updateModeAgg(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-    val agg = stream.groupBy(col("event_type"))
+  def updateModeAgg(spark: SparkSession, dir: String): DataFrame =
+    drain(source(spark, dir, "events").groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value")).cast("float").as("sum_value"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+           sum(col("value")).cast("float").as("sum_value")),
+      OutputMode.Update())
 
   /** Streaming exact dedup: dropDuplicates on the content hash keyed by
     * state. In an always-on pipeline the watermark bounds how long a
     * hash is remembered; with AvailableNow the emitted hash set is
     * exactly the batch DISTINCT (which row carried the first arrival is
     * batch-order-dependent, so callers project the key columns). */
-  def streamingDedup(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val deduped = stream
+  def streamingDedup(spark: SparkSession, dir: String): DataFrame =
+    drain(source(spark, dir, "documents")
       .withColumn("content_hash", md5(col("text")))
       .dropDuplicates("content_hash")
-      .select(col("content_hash"))
-    val q = deduped.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+      .select(col("content_hash")),
+      OutputMode.Append())
+
+  /** Purchases within `windowUs` after a click by the same user, as
+    * (click_id, purchase_id, user_id, lag_us); both sides carry the
+    * event-time watermark `delay`, and `joinType` is "inner" or
+    * "leftOuter". */
+  private def intervalJoin(spark: SparkSession, dir: String, windowUs: Long,
+                           delay: String, joinType: String): DataFrame = {
+    def side(eventType: String, id: String, user: String, time: String) =
+      source(spark, dir, "events")
+        .filter(col("event_type") === eventType)
+        .select(col("event_id").as(id), col("user_id").as(user),
+          expr("timestamp_micros(ts div 1000)").as(time))
+        .withWatermark(time, delay)
+    val clicks = side("click", "click_id", "c_user", "c_time")
+    val purchases = side("purchase", "purchase_id", "p_user", "p_time")
+    drain(clicks.join(purchases,
+        col("c_user") === col("p_user") &&
+          col("p_time") >= col("c_time") &&
+          col("p_time") <= col("c_time") + expr(s"INTERVAL $windowUs MICROSECOND"),
+        joinType)
+      .select(col("click_id"), col("purchase_id"), col("c_user").as("user_id"),
+        expr("unix_micros(p_time) - unix_micros(c_time)").as("lag_us")),
+      OutputMode.Append())
   }
 
   /** Stream–stream interval join: purchases within `windowUs` after a
@@ -205,36 +207,8 @@ object Streams {
     * state is bounded; the time-range condition lets Spark expire rows
     * once the other side's watermark passes. AvailableNow emits exactly
     * the batch join result. */
-  def streamStreamJoin(spark: SparkSession, dir: String, windowUs: Long,
-                       queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-      .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("event_time").as("c_time"))
-      .withWatermark("c_time", "1 hour")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("event_time").as("p_time"))
-      .withWatermark("p_time", "1 hour")
-    val joined = clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-        col("p_time") >= col("c_time") &&
-        col("p_time") <= col("c_time") + expr(s"INTERVAL $windowUs MICROSECOND"))
-    val q = joined
-      .select(col("click_id"), col("purchase_id"), col("c_user").as("user_id"),
-        expr("unix_micros(p_time) - unix_micros(c_time)").as("lag_us"))
-      .writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def streamStreamJoin(spark: SparkSession, dir: String, windowUs: Long): DataFrame =
+    intervalJoin(spark, dir, windowUs, "1 hour", "inner")
 
   /** Stream–stream LEFT OUTER interval join: like streamStreamJoin, but
     * clicks with no purchase in the window are emitted with nulls — the
@@ -247,62 +221,22 @@ object Streams {
     * streaming behavior, and the oracle reproduces exactly that cutoff
     * rather than pretending the batch left join is the answer. */
   def streamStreamLeftOuter(spark: SparkSession, dir: String, windowUs: Long,
-                            delay: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-      .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("event_time").as("c_time"))
-      .withWatermark("c_time", delay)
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("event_time").as("p_time"))
-      .withWatermark("p_time", delay)
-    val joined = clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-        col("p_time") >= col("c_time") &&
-        col("p_time") <= col("c_time") + expr(s"INTERVAL $windowUs MICROSECOND"),
-      "leftOuter")
-    val q = joined
-      .select(col("click_id"), col("purchase_id"),
-        col("c_user").as("user_id"),
-        expr("unix_micros(p_time) - unix_micros(c_time)").as("lag_us"))
-      .writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+                            delay: String): DataFrame =
+    intervalJoin(spark, dir, windowUs, delay, "leftOuter")
 
   /** Stream–static enrichment join: each micro-batch joins against a
     * static dimension table — STATELESS (unlike stream–stream joins, no
     * watermark or state store needed; the static side is just re-planned
     * per batch), which is why it is the preferred shape whenever the
     * right side is slowly-changing reference data. Broadcast by size. */
-  def streamStaticJoin(spark: SparkSession, dir: String,
-                       queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
+  def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     val dim = spark.read.parquet(s"$dir/nation.parquet")
       .select(col("n_nationkey"), col("n_name"))
-    val joined = stream
+    drain(source(spark, dir, "events")
       .withColumn("nat", col("user_id") % 25)
       .join(broadcast(dim), col("nat") === col("n_nationkey"))
-      .select(col("event_id"), col("user_id"), col("n_name"))
-    val q = joined.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+      .select(col("event_id"), col("user_id"), col("n_name")),
+      OutputMode.Append())
   }
 
   final case class Ev(user_id: Long, ts: Long, event_id: Long, value: Double)
@@ -313,21 +247,22 @@ object Streams {
                            ts_start: Long, ts_end: Long, sum_value: Double,
                            sum_value_milli: Long)
 
+  /** The events stream as typed [[Ev]] rows. */
+  private def events(spark: SparkSession, dir: String): Dataset[Ev] = {
+    import spark.implicits._
+    source(spark, dir, "events")
+      .select(col("user_id").cast("long"), col("ts").cast("long"),
+        col("event_id").cast("long"), col("value").cast("double"))
+      .as[Ev]
+  }
+
   /** Gap-based sessionization with flatMapGroupsWithState: a new session
     * starts when the inter-event gap exceeds `gapNs`. AvailableNow
     * delivers each user's full history in one batch; an always-on
     * deployment would use EventTimeTimeout + watermark to emit/expire. */
-  def sessionize(spark: SparkSession, dir: String, gapNs: Long,
-                 queryName: String): DataFrame = {
+  def sessionize(spark: SparkSession, dir: String, gapNs: Long): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-      .select(col("user_id").cast("long"), col("ts").cast("long"),
-        col("event_id").cast("long"), col("value").cast("double"))
-      .as[Ev]
-    val sessions = stream
+    val sessions = events(spark, dir)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[Long, Session](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -355,13 +290,7 @@ object Streams {
           state.update(idx + 1)
           out.result().iterator
       }
-    val q = sessions.toDF().writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(sessions.toDF(), OutputMode.Append())
   }
 
   final case class UserTotals(user_id: Long, n_events: Long, vm_sum: Long,
@@ -372,7 +301,7 @@ object Streams {
     * the refreshed totals each micro-batch. This is the successor API
     * to flatMapGroupsWithState (typed state handles, TTL, timers,
     * multiple state variables per processor) and REQUIRES the RocksDB
-    * state store provider — the caller sets it (see StreamsSpec).
+    * state store provider, which [[runningTotals]]' drive sets.
     * Milli-long value quantization keeps the fold order-free, as
     * everywhere else in the repo. */
   private class RunningTotalsProcessor
@@ -400,29 +329,16 @@ object Streams {
     }
   }
 
-  /** Drive the transformWithState totals over the events backlog;
-    * update-mode memory sink — the LAST row per user is the converged
-    * total (equal to the batch groupBy; asserted in StreamsSpec). */
-  def runningTotals(spark: SparkSession, dir: String,
-                    queryName: String): DataFrame = {
+  /** Drive the transformWithState totals over the events backlog on
+    * the RocksDB state store, on any session; update mode — the LAST
+    * row per user is the converged total (equal to the batch groupBy;
+    * asserted in StreamsSpec). */
+  def runningTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.queries.normalizeEventTs)
-      .select(col("user_id").cast("long"), col("ts").cast("long"),
-        col("event_id").cast("long"), col("value").cast("double"))
-      .as[Ev]
-    val out = stream.groupByKey(_.user_id)
+    val out = events(spark, dir).groupByKey(_.user_id)
       .transformWithState(new RunningTotalsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
-    val q = out.toDF().writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(out.toDF(), OutputMode.Update(), rocksDb = true)
   }
 }

@@ -161,15 +161,14 @@ class GraftSessionSpec extends SparkSpec {
     assert(options.keySet -- read == Set.empty, "allow-listed options nothing reads")
   }
 
-  test("no query builder sets or unsets a conf, except n09's state store provider") {
+  test("no query builder sets or unsets a conf; only the stream drive does") {
     val setter = """conf\s*\.\s*(set|unset)\s*\(""".r
-    val hits = scalaFiles("src/main/scala/graft/queries").map(p =>
+    val hits = scalaFiles("src/main").map(p =>
       p.getFileName.toString -> setter.findAllIn(Files.readString(p)).size).filter(_._2 > 0)
-    val streams = Files.readString(Paths.get("src/main/scala/graft/queries/StreamQueries.scala"))
-    val n09 = streams.substring(streams.indexOf("private def n09("),
-      streams.indexOf("private val n09Sql"))
-    assert(n09.contains("stateStore.providerClass"))
-    assert(hits == Seq("StreamQueries.scala" -> setter.findAllIn(n09).size), hits)
+    assert(hits == Seq("Streams.scala" -> 3), hits)
+    val streams = Files.readString(Paths.get("src/main/scala/graft/streaming/Streams.scala"))
+    val drain = streams.substring(streams.indexOf("def drain("), streams.indexOf("def windowedAgg("))
+    assert(setter.findAllIn(drain).size == 3)
   }
 
   test("SPARK_GRAFT_CPUS: unset means every core, else a positive integer") {

@@ -132,6 +132,34 @@ class RunPipelineRunSpec extends SparkSpec {
       s"stage-1 reads: ${stage1Reads.map(_.partitionFilters)}")
   }
 
+  test("s04 starts no job while it is built beyond s03's, and scans lineitem once when it runs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val session = spark.newSession()
+    val sc = session.sparkContext
+    /** The jobs started while `q` is built, and the built DataFrame. */
+    def build(q: String): (Int, DataFrame) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      GraftBridge.drainListenerBus(sc, 10000L)
+      sc.addSparkListener(listener)
+      try {
+        val df = StageQueries.queries(q)(session, dir)
+        GraftBridge.drainListenerBus(sc, 10000L)
+        (jobs.get, df)
+      } finally sc.removeSparkListener(listener)
+    }
+    // building s03 starts the one job of reading lineitem's Parquet
+    // schema; s04 is built on s03 and must add none
+    val (s03Jobs, _) = build("s03_stage2_histograms")
+    val (s04Jobs, s04) = build("s04_stage3_templates")
+    assert(s04Jobs == s03Jobs, s"building s04 started $s04Jobs jobs, s03 $s03Jobs")
+    val scans = scansOf(session)(s04.collect())
+      .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("lineitem.parquet")))
+    assert(scans.size == 1, s"s04 scanned lineitem ${scans.size} times")
+  }
+
   test("RunPipeline.run's jobs carry the caller's local properties and output stream") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val out = Files.createTempDirectory("graft_run_tags").toString

@@ -72,19 +72,17 @@ class LogQuantileSketchSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val schema = s2.read.parquet(s"$dir/events.parquet").schema
     val agg = "qsketch_buckets(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))"
-    val got = graft.streaming.Streams.withStatePartitions(s2, 4) {
-      val q = s2.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .groupBy(col("event_type"))
-        .agg(expr(agg).as("m"))
-        .writeStream.format("memory").queryName("spec_qsketch_stream")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s2.table("spec_qsketch_stream").orderBy("event_type")
-        .collect().map(r => r.getString(0) -> r.getMap[Int, Long](1).toMap).toMap
-    }
+    val q = s2.readStream.schema(schema)
+      .option("pathGlobFilter", "events.parquet").parquet(dir)
+      .groupBy(col("event_type"))
+      .agg(expr(agg).as("m"))
+      .writeStream.format("memory").queryName("spec_qsketch_stream")
+      .outputMode("complete")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = s2.table("spec_qsketch_stream").orderBy("event_type")
+      .collect().map(r => r.getString(0) -> r.getMap[Int, Long](1).toMap).toMap
     val want = graft.queries.normalizeEventTs(s2.read.parquet(s"$dir/events.parquet"))
       .groupBy(col("event_type")).agg(expr(agg).as("m"))
       .collect().map(r => r.getString(0) -> r.getMap[Int, Long](1).toMap).toMap

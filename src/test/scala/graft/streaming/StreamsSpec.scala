@@ -11,7 +11,7 @@ class StreamsSpec extends SparkSpec {
 
   test("windowed streaming aggregation equals batch groupBy") {
     val dir = sf("sf0.001")
-    val streamed = Streams.windowedAgg(spark, dir, "spec_agg")
+    val streamed = Streams.windowedAgg(spark, dir)
       .orderBy("hour_bucket", "event_type").collect()
     val batch = graft.queries.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
       .withColumn("hour_bucket", expr(s"ts div $HourNs"))
@@ -24,7 +24,7 @@ class StreamsSpec extends SparkSpec {
 
   test("watermarked append-mode windows emit exactly the finalized batch windows") {
     val dir = sf("sf0.001")
-    val streamed = Streams.windowedAggWatermarked(spark, dir, "2 hours", "spec_wm")
+    val streamed = Streams.windowedAggWatermarked(spark, dir, "2 hours")
       .selectExpr("window.start AS w_start", "event_type", "n_events", "sum_value")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
     val ev = graft.queries.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
@@ -79,7 +79,7 @@ class StreamsSpec extends SparkSpec {
   test("streaming sessionization equals batch window-function sessionization") {
     val dir = sf("sf0.001")
     val gap = 8L * HourNs
-    val streamed = Streams.sessionize(spark, dir, gap, "spec_sess")
+    val streamed = Streams.sessionize(spark, dir, gap)
       .orderBy("user_id", "session_idx").collect()
     graft.queries.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet")).createOrReplaceTempView("ev_spec")
     val batch = spark.sql(
@@ -115,18 +115,16 @@ class StreamsSpec extends SparkSpec {
     val schema = s2.read.parquet(s"$dir/events.parquet").schema
     val hashExpr = "((user_id * 1024 + ((CAST(floor(value * 10) AS BIGINT) % 1024 " +
       "+ 1024) % 1024)) * 2654435761) % 2147483647"
-    val got = graft.streaming.Streams.withStatePartitions(s2, 4) {
-      val q = s2.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .groupBy(col("event_type"))
-        .agg(expr(s"hll_registers($hashExpr, 9)").as("regs"))
-        .writeStream.format("memory").queryName("spec_hll_stream")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s2.table("spec_hll_stream").orderBy("event_type").collect()
-    }
+    val q = s2.readStream.schema(schema)
+      .option("pathGlobFilter", "events.parquet").parquet(dir)
+      .groupBy(col("event_type"))
+      .agg(expr(s"hll_registers($hashExpr, 9)").as("regs"))
+      .writeStream.format("memory").queryName("spec_hll_stream")
+      .outputMode("complete")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val got = s2.table("spec_hll_stream").orderBy("event_type").collect()
     val want = graft.queries.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
       .groupBy(col("event_type"))
       .agg(expr(s"hll_registers($hashExpr, 9)").as("regs"))
@@ -140,15 +138,12 @@ class StreamsSpec extends SparkSpec {
 
   test("transformWithState running totals converge to the batch groupBy") {
     // Spark 4 arbitrary-state v2: explicit ValueState handles, TTL
-    // config, update-mode emission. Requires RocksDB state store.
+    // config, update-mode emission. Requires the RocksDB state store,
+    // which runningTotals sets itself
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dir = sf("sf0.001")
-    val updates = Streams.withStatePartitions(s2, 4) {
-      Streams.runningTotals(s2, dir, "spec_tws_totals")
-    }
+    val updates = Streams.runningTotals(s2, dir)
     // update mode may emit one row per key per micro-batch; the LAST
     // row per key is the converged total
     val w = org.apache.spark.sql.expressions.Window
@@ -252,9 +247,8 @@ class StreamsSpec extends SparkSpec {
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dir = sf("sf0.001")
-    val got = Streams.withStatePartitions(s2, 4) {
-      Streams.windowedAgg(s2, dir, "spec_rocksdb_agg")
-    }.orderBy("hour_bucket", "event_type").collect()
+    val got = Streams.windowedAgg(s2, dir)
+      .orderBy("hour_bucket", "event_type").collect()
     val want = graft.queries.normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
       .withColumn("hour_bucket", expr(s"ts div $HourNs"))
       .groupBy(col("hour_bucket"), col("event_type"))
@@ -263,5 +257,33 @@ class StreamsSpec extends SparkSpec {
       .orderBy("hour_bucket", "event_type").collect()
     assert(got.length == want.length && got.length > 0)
     got.zip(want).foreach { case (g, w) => assert(g == w) }
+  }
+
+  test("the drive sets its state-store confs only while the stream runs") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocksDb =
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val dir = sf("sf0.001")
+    val plain = spark.newSession()
+    val partitions = plain.conf.get("spark.sql.shuffle.partitions")
+    assert(Streams.runningTotals(plain, dir).count() > 0)
+    assert(!plain.conf.getAll.contains(provider), plain.conf.get(provider))
+    assert(plain.conf.get("spark.sql.shuffle.partitions") == partitions)
+    val rocks = spark.newSession()
+    rocks.conf.set(provider, rocksDb)
+    assert(Streams.windowedAgg(rocks, dir).count() > 0)
+    assert(Streams.runningTotals(rocks, dir).count() > 0)
+    assert(rocks.conf.get(provider) == rocksDb)
+  }
+
+  test("a drained stream leaves no sink view in the catalog, and its result keeps its rows") {
+    val s2 = spark.newSession()
+    val dir = sf("sf0.001")
+    def run(q: String) = graft.SparkEntry.queries(q)(s2, dir).collect().toSeq
+    val first = Seq("n01_stream_window_agg", "n05_stream_update_mode").map(run)
+    val second = Seq("n01_stream_window_agg", "n05_stream_update_mode").map(run)
+    val views = s2.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_stream_"))
+    assert(views.isEmpty, views.mkString(", "))
+    assert(first.forall(_.nonEmpty) && first == second)
   }
 }

@@ -15,6 +15,6 @@ exec java \
   --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Xmx"${SPARK_GRAFT_MEM:-8g}" -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Xmx"${SPARK_GRAFT_MEM:-8g}" \
   -cp "$(dirname "$0")/../target/scala-2.13/classes:$(dirname "$0")/../src/main/resources:/opt/spark/jars/*" \
   "$CLASS" "$@"
